@@ -99,3 +99,22 @@ def test_benchmark_svg_written(spark, tmp_path):
     assert svg.startswith("<svg") and "circle" in svg and "d/a" in svg
     empty = qps_recall_svg({})
     assert empty.startswith("<svg")
+
+
+def test_cached_schema_read_sees_rewritten_parquet(spark, tmp_path):
+    """The catalogue's parquet schema memo keys on (path, mtime, size):
+    rewriting a path with another schema in the same process must read
+    the new schema, not the memoized one."""
+    from vectordb_retrieval_spark.driver_queries.common import (
+        read_parquet_cached_schema,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "a long").write.mode("overwrite").parquet(path)
+    assert read_parquet_cached_schema(spark, path).columns == ["a"]
+    spark.createDataFrame([("x",)], "b string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = read_parquet_cached_schema(spark, path)
+    assert df.columns == ["b"]
+    assert [r["b"] for r in df.collect()] == ["x"]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -16,21 +18,29 @@ QUERY_FILTER = "vec_id % 10 = 0"
 # construction — memoized since r13
 _SCAN_NPARTS: dict = {}
 
-# inferred parquet schemas per path: a bare ``spark.read.parquet(path)``
-# runs a 1-task footer-inference JOB per call, and the catalogue pays it
-# once per table reference per query invocation (the r14 job breakdown
-# showed it as the first 1-task job of every headline query).  The
-# schema is a pure function of the committed file, so infer once per
-# process and hand it to the reader explicitly afterwards — schema
-# metadata only, never data (every invocation still scans the parquet).
+# inferred parquet schemas per (path, mtime, size): a bare
+# ``spark.read.parquet(path)`` runs a 1-task footer-inference JOB per
+# call, and the catalogue pays it once per table reference per query
+# invocation (the r14 job breakdown showed it as the first 1-task job
+# of every headline query).  The schema is a pure function of the
+# files, so infer once per version of the path and hand it to the
+# reader explicitly afterwards — schema metadata only, never data
+# (every invocation still scans the parquet).  A rewrite of the path
+# changes its mtime and so re-infers; a path ``os.stat`` cannot see
+# (a remote filesystem) keys on the path alone.
 _SCHEMA_MEMO: dict = {}
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    s = _SCHEMA_MEMO.get(path)
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = (path, None, None)
+    s = _SCHEMA_MEMO.get(key)
     if s is None:
         s = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[path] = s
+        _SCHEMA_MEMO[key] = s
     return spark.read.schema(s).parquet(path)
 
 

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark.functions import replica
 from vectordb_retrieval_spark.functions.distance import normalize_rows
 
 
@@ -318,10 +319,11 @@ def topk_cols_tiebreak(
 
 
 class SearchPlanMemo:
-    """WeakKey search-plan memo (the IVFSearcher pattern, shared):
-    repeated searches of the same query frame rebuild an identical lazy
-    plan — ~60 ms of driver-side pyspark object construction per call
-    at serving rates, plus any per-plan broadcasts.  Results are
+    """The one search-plan memo every searcher family uses, keyed
+    weakly on the query frame: repeated searches of the same frame
+    rebuild an identical lazy plan — ~60 ms of driver-side pyspark
+    object construction per call at serving rates, plus any per-plan
+    broadcasts.  Results are
     deterministic per (artifact, query frame, key); execution still
     runs in full on every materialization.
 
@@ -330,7 +332,12 @@ class SearchPlanMemo:
     to a new artifact that collides could then serve a plan built
     against the dead one (advisor r11).  Pass the artifact as ``guard``
     to both calls: the stored weakref must still resolve to the SAME
-    object for a hit to count."""
+    object for a hit to count.
+
+    ``root``: the node-local replica root a plan reads (see
+    ``functions/replica.py``).  A hit re-touches it; once it is swept
+    or released, only the entries that embed it miss, and the rebuild
+    republishes."""
 
     def __init__(self) -> None:
         self._m: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -345,12 +352,14 @@ class SearchPlanMemo:
         hit = per_df.get(key)
         if hit is None:
             return None
-        ref, value = hit
+        ref, value, root = hit
         if ref is not None and ref() is not guard:
             return None  # recycled id(): plan belongs to a dead object
+        if root is not None and not replica.alive(root):
+            return None
         return value
 
-    def put(self, query_df: DataFrame, key, value, guard=None):
+    def put(self, query_df: DataFrame, key, value, guard=None, root=None):
         try:
             per_df = self._m.get(query_df)
             if per_df is None:
@@ -365,7 +374,7 @@ class SearchPlanMemo:
                     # liveness-checked, so skip memoization (perf-only)
                     # rather than store an entry that always validates
                     return value
-            per_df[key] = (ref, value)
+            per_df[key] = (ref, value, root)
         except TypeError:
             pass
         return value
@@ -411,23 +420,20 @@ def rowwise_distance(
     raise ValueError(f"unknown metric {metric!r}")
 
 
-# read-only mmaps of published packed blobs, memoized per process (the
-# mmap object must outlive every frombuffer view taken on it)
-_BLOB_MMAPS: dict = {}
 # decoded-scan-form cache (see _decoded_shm): per-root disable flag set
-# when /dev/shm can't hold the decoded index — fall back to per-call
+# when tmpfs can't hold the decoded index — fall back to per-call
 # decode rather than fail the search
 _DEC_DISABLED: set = set()
 
 
 def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
-    """The float64 scan form of one packed blob, shm-cached: the
+    """The float64 scan form of one packed blob, replica-cached: the
     partitioned kernel used to re-decode codes → f64 and recompute row
     norms on EVERY search (at 150k×384-d that is ~0.5 GB of decode +
     norm traffic per search; 3 GB at 1M).  The decode is deterministic,
-    so the first task to need a (cluster, sub, metric) publishes its
-    scan form to /dev/shm (tmp + atomic rename) and everyone mmaps one
-    shared copy.  Returns (mat64, aux):
+    so the first task to need a (cluster, sub, metric) writes its scan
+    form into the packed replica root and everyone mmaps one shared
+    copy.  Returns (mat64, aux):
 
     - l2:     mat64 = decoded f64 rows, aux = their squared norms —
               exactly the ``(b*b).sum(axis=1)`` pairwise_distances
@@ -437,49 +443,34 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
 
     Returns None when caching is disabled for this root (publish
     failed: tmpfs full) — caller decodes per call."""
-    import mmap as _mmap
     import os
-    import tempfile
-
-    from vectordb_retrieval_spark.functions.distance import normalize_rows
 
     if root in _DEC_DISABLED:
         return None
-    path = os.path.join(root, f"{cid}-{sub}.{metric}.dec64")
-    mm = _BLOB_MMAPS.get(path)
-    if mm is None:
-        if not os.path.exists(path):
+    name = f"{cid}-{sub}.{metric}.dec64"
+    try:
+        try:
+            mm = replica.mmap_file(root, name)
+        except FileNotFoundError:
             b64 = (
                 np.asarray(raw.astype(np.float32), dtype=np.float64)
                 if cdc is None
                 else np.asarray(cdc.decode(raw), dtype=np.float64)
             )
             if metric == "cosine":
-                payload = np.ascontiguousarray(normalize_rows(b64)).tobytes()
+                parts = [np.ascontiguousarray(normalize_rows(b64)).tobytes()]
             elif metric == "l2":
-                payload = (
-                    np.ascontiguousarray(b64).tobytes()
-                    + (b64 * b64).sum(axis=1).tobytes()
-                )
+                parts = [
+                    np.ascontiguousarray(b64).tobytes(),
+                    (b64 * b64).sum(axis=1).tobytes(),
+                ]
             else:
-                payload = np.ascontiguousarray(b64).tobytes()
-            try:
-                fd, tmp = tempfile.mkstemp(dir=root, prefix=".dec-")
-                with os.fdopen(fd, "wb") as fh:
-                    fh.write(payload)
-                os.replace(tmp, path)
-            except OSError:
-                _DEC_DISABLED.add(root)
-                return None
-        try:
-            with open(path, "rb") as fh:
-                mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        except OSError:
-            _DEC_DISABLED.add(root)
-            return None
-        if len(_BLOB_MMAPS) >= 65536:
-            _BLOB_MMAPS.clear()
-        _BLOB_MMAPS[path] = mm
+                parts = [np.ascontiguousarray(b64).tobytes()]
+            replica.write_blob(os.path.join(root, name), *parts)
+            mm = replica.mmap_file(root, name)
+    except OSError:
+        _DEC_DISABLED.add(root)
+        return None
     # decoded width comes from the PUBLISHED blob, not raw.shape[1]:
     # width-changing codecs (PCA reduced coordinates, PQ codes) decode
     # to the full dimension, so the code width would mis-reshape the
@@ -502,21 +493,6 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
     else:
         aux = None
     return mat64, aux
-
-
-def _mmap_blob(root: str, cid: int, sub: int):
-    import mmap as _mmap
-    import os
-
-    path = os.path.join(root, f"{cid}-{sub}.bin")
-    mm = _BLOB_MMAPS.get(path)
-    if mm is None:
-        if len(_BLOB_MMAPS) >= 65536:
-            _BLOB_MMAPS.clear()
-        with open(path, "rb") as fh:
-            mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        _BLOB_MMAPS[path] = mm
-    return mm
 
 
 def pack_assignment(
@@ -746,91 +722,42 @@ def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
 
 
 def packed_shm_cached(art, table: str = "assignment"):
-    """Node-local shared-memory form of the packed assignment (the same
-    serving architecture as graph_ann's shard cache): on a single-node
-    master, each (cluster_id, sub) blob is published ONCE to /dev/shm
+    """Node-local replica of the packed assignment (the transport is
+    ``functions/replica.py``, shared with graph ANN's shards): on a
+    single-node master, each (cluster_id, sub) blob is published ONCE
     (one distributed pass over the packed table; ids bytes + payload
-    bytes per file, tmp + atomic rename) and searches then scan a
-    blob-free METADATA table — per-search Arrow traffic drops from the
-    probed payload bytes to a few hundred metadata ints, and the page
-    cache holds one physical copy of the index per node.  The metadata
-    DataFrame is a narrow projection of the placed packed table, so it
-    inherits the load-balanced task placement.
+    bytes per file) and searches then scan a blob-free METADATA table —
+    per-search Arrow traffic drops from the probed payload bytes to a
+    few hundred metadata ints, and the page cache holds one physical
+    copy of the index per node.  The metadata DataFrame is a narrow
+    projection of the placed packed table, so it inherits the
+    load-balanced task placement.  The root is released with ``art``.
 
-    Returns (shm_root, metadata DataFrame) or None when gated off
-    (multi-executor master, no /dev/shm, publish failure).  Memoized on
-    the artifact (runtime-only ``_`` param)."""
-    import os
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
+    Returns (root, metadata DataFrame) or None when gated off
+    (multi-executor master, no tmpfs, publish failure).  Memoized on
+    the artifact (runtime-only ``_`` param); a swept root republishes."""
     memo = art.params.get("_packed_shm", "unset")
     if memo is None:
         return None
-    if memo != "unset" and os.path.isdir(memo[0]):
-        try:
-            os.utime(memo[0])  # keep the TTL sweep at bay while in use
-        except OSError:
-            pass
+    if memo != "unset" and replica.alive(memo[0]):
         return memo
     packed = packed_assignment_cached(art, table)
-    spark = packed.sparkSession
-    if not (
-        spark.sparkContext.master.startswith("local")
-        and os.path.isdir("/dev/shm")
-    ):
+    if not replica.enabled(packed.sparkSession):
         art.params["_packed_shm"] = None
         return None
-    shm_base = "/dev/shm/vr_spark_shm"
-    root = os.path.join(shm_base, f"packed-{uuid.uuid4().hex}")
     try:
-        os.makedirs(shm_base, exist_ok=True)
-        now = time.time()
-        for entry in os.listdir(shm_base):
-            p = os.path.join(shm_base, entry)
-            try:
-                if now - os.path.getmtime(p) > 3600.0:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                continue
-
-        def pub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            os.makedirs(root, exist_ok=True)
-            n_done = 0
-            for pdf in batches:
-                for cid, sub, ids, payload in zip(
-                    pdf["cluster_id"], pdf["sub"], pdf["ids"], pdf["payload"]
-                ):
-                    final = os.path.join(root, f"{int(cid)}-{int(sub)}.bin")
-                    if not os.path.exists(final):
-                        fd, tmp = tempfile.mkstemp(dir=root, prefix=".pub-")
-                        with os.fdopen(fd, "wb") as fh:
-                            fh.write(ids)
-                            fh.write(payload)
-                        os.replace(tmp, final)
-                    n_done += 1
-            yield pd.DataFrame({"n": [n_done]})
-
-        total_rows = packed.count()
-        published = sum(
-            r["n"]
-            for r in packed.select("cluster_id", "sub", "ids", "payload")
-            .mapInPandas(pub, schema="n long")
-            .collect()
+        root, _ = replica.publish(
+            packed, "packed", ["cluster_id", "sub"], ["ids", "payload"]
         )
-        if published != total_rows:
-            raise OSError(f"published {published} of {total_rows} blobs")
-        meta = packed.select("cluster_id", "n", "width", "dt", "sub").cache()
-        meta.count()
-        got = (root, meta)
-        art.params["_packed_shm"] = got
-        return got
     except OSError:
-        shutil.rmtree(root, ignore_errors=True)
         art.params["_packed_shm"] = None
         return None
+    replica.own(art, root)
+    meta = packed.select("cluster_id", "n", "width", "dt", "sub").cache()
+    meta.count()
+    got = (root, meta)
+    art.params["_packed_shm"] = got
+    return got
 
 
 def cluster_scan_topk(
@@ -928,7 +855,9 @@ def cluster_scan_topk(
                     # node-local blob: two frombuffer views on a shared
                     # read-only mmap (see packed_shm_cached) — zero
                     # per-search blob bytes through Arrow
-                    mm = _mmap_blob(shm_root, int(cids[i]), int(subs[i]))
+                    mm = replica.mmap_file(
+                        shm_root, f"{int(cids[i])}-{int(subs[i])}.bin"
+                    )
                     n_i = int(ns[i])
                     ids = np.frombuffer(mm, dtype=np.int64, count=n_i)
                     raw = np.frombuffer(

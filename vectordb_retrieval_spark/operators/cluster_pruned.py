@@ -144,7 +144,7 @@ class ClusterPrunedExactSearcher:
     ):
         self.nprobe = nprobe
         self.broadcast_threshold = broadcast_threshold
-        # see IVFSearcher: /dev/shm blob transport on single-node
+        # see IVFSearcher: node-local replica transport on single-node
         # masters; False forces the blob-shipping partitioned plan
         self.node_local_cache = node_local_cache
         self.artifact: IndexArtifact | None = None
@@ -156,10 +156,8 @@ class ClusterPrunedExactSearcher:
         # per-frame plan reuse: the broadcast path and the FUSED
         # partitioned plan (no eager action) are memoized; the TWO-PHASE
         # partitioned plan is not (its phase-1 T_q collect is an eager
-        # per-search action).  A fused-plan memo hit under
-        # node_local_cache re-touches the /dev/shm root first (see
-        # ``search``) so the TTL sweep cannot reap blobs the memoized
-        # plan still references.
+        # per-search action).  A fused plan records the replica root it
+        # reads, so a hit re-touches it and a swept root misses.
         self._plans = SearchPlanMemo()
 
     def attach(self, artifact: IndexArtifact) -> "ClusterPrunedExactSearcher":
@@ -331,23 +329,6 @@ class ClusterPrunedExactSearcher:
         # scan from the index.  The two-phase plan stays unmemoized
         # (its T_q collect is an eager per-search action).
         mk_part = (k, qid_col, vec_col, self.nprobe, id(art), "fused")
-        if self.node_local_cache:
-            # the memoized fused plan may embed a /dev/shm packed root
-            # (advisor r13).  IVFSearcher's contract: a TTL-swept root
-            # invalidates the memo (a republish gets a NEW root, so the
-            # old plan would read dead paths); a live root is re-touched
-            # (packed_shm_cached's memo hit does os.utime) so the sweep
-            # a later publish triggers cannot reap blobs a live plan
-            # still reads.  Cheap: dict lookup + one utime per search.
-            import os as _os
-
-            shm_memo = art.params.get("_packed_shm")
-            if isinstance(shm_memo, tuple):
-                if _os.path.isdir(shm_memo[0]):
-                    packed_shm_cached(art)
-                else:
-                    art.params.pop("_packed_shm", None)
-                    self._plans = type(self._plans)()
         memo = self._plans.get(query_df, mk_part, guard=art)
         if memo is not None:
             return memo
@@ -446,6 +427,7 @@ class ClusterPrunedExactSearcher:
                     mk_part,
                     merge_fragment_topk(scanned, k, n_queries=len(qids)),
                     guard=art,
+                    root=shm_root,
                 )
 
         # phase 1 emission clipped at T'_q too (when available): a

@@ -69,9 +69,7 @@ so the frontier is data-bound, not configuration-bound.
 
 from __future__ import annotations
 
-import os
 import uuid
-import weakref
 from typing import Iterator
 
 import numpy as np
@@ -84,94 +82,17 @@ from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
-from vectordb_retrieval_spark.functions.kernels import rowwise_distance
+from vectordb_retrieval_spark.functions import replica
+from vectordb_retrieval_spark.functions.kernels import (
+    SearchPlanMemo,
+    collect_or_chunk,
+    rowwise_distance,
+)
 from vectordb_retrieval_spark.functions.hashing import (
     make_projections,
     sign_buckets,
 )
 from vectordb_retrieval_spark.operators.topk import topk_per_query
-
-
-# Node-local shard cache (see also serving._SHM_ROOT): above the
-# broadcast threshold the partitioned path used to ship every probed
-# shard blob through Arrow into the python workers ON EVERY SEARCH —
-# at 1M×384-d that is ~GBs of blob traffic per 1024-query batch and it
-# dominated the search wall.  On a single-node master (local[...]) the
-# shards are instead PUBLISHED once to /dev/shm by a one-off job and
-# every search maps them read-only by pid: tasks carry only (pid,
-# chunk) ints, the page cache holds one physical copy per node, and
-# per-search blob traffic drops to zero.  This is the index-replica
-# serving architecture (the reference's in-RAM index, FAISS serving
-# fleets): the cluster distributes QUERIES, not index bytes.  On a
-# multi-executor master the publish would land each shard on one node
-# only, so the gate keeps the blob-shipping path there; a cluster
-# deployment replicates the artifact per node the same way (node-local
-# SSD/ramdisk) before flipping this on.
-_SHM_SHARD_ROOT = "/dev/shm/vr_spark_shm"
-_SHM_SHARD_TTL_S = 3600.0
-_SHARD_MMAPS: dict = {}
-
-
-def _mmap_shard(root: str, pid: int):
-    """Read-only mmap of a published shard blob, memoized per process
-    (the mmap object must outlive every frombuffer view taken on it)."""
-    import mmap as _mmap
-    import os
-
-    path = os.path.join(root, f"{pid}.bin")
-    mm = _SHARD_MMAPS.get(path)
-    if mm is None:
-        if len(_SHARD_MMAPS) >= 8192:
-            _SHARD_MMAPS.clear()
-        with open(path, "rb") as fh:
-            mm = _mmap.mmap(fh.fileno(), 0, prot=_mmap.PROT_READ)
-        _SHARD_MMAPS[path] = mm
-    return mm
-
-
-def _publish_shards(graph_df: DataFrame, key: str) -> tuple[str, list[int]]:
-    """One distributed pass over the graph table writing each (pid,
-    blob) to /dev/shm (tmp file + atomic rename; re-publish of an
-    existing pid is a no-op).  Returns (root, sorted pids).  Stale
-    sibling entries are age-swept first."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    os.makedirs(_SHM_SHARD_ROOT, exist_ok=True)
-    now = _time.time()
-    for entry in os.listdir(_SHM_SHARD_ROOT):
-        p = os.path.join(_SHM_SHARD_ROOT, entry)
-        try:
-            if now - os.path.getmtime(p) > _SHM_SHARD_TTL_S:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-    root = os.path.join(_SHM_SHARD_ROOT, f"shards-{key}")
-
-    def pub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        os.makedirs(root, exist_ok=True)
-        done = []
-        for pdf in batches:
-            for pid, blob in zip(pdf["pid"], pdf["blob"]):
-                pid = int(pid)
-                final = os.path.join(root, f"{pid}.bin")
-                if not os.path.exists(final):
-                    fd, tmp = tempfile.mkstemp(dir=root, prefix=".pub-")
-                    with os.fdopen(fd, "wb") as fh:
-                        fh.write(blob)
-                    os.replace(tmp, final)
-                done.append(pid)
-        yield pd.DataFrame({"pid": np.asarray(done, dtype=np.int64)})
-
-    pids = sorted(
-        int(r["pid"])
-        for r in graph_df.select("pid", "blob")
-        .mapInPandas(pub, schema="pid long")
-        .collect()
-    )
-    return root, pids
 
 
 def _pad_adjacency(adj: list[np.ndarray]) -> np.ndarray:
@@ -1109,39 +1030,20 @@ class GraphANNSearcher:
         self.broadcast_threshold = broadcast_threshold
         self.force_beam = force_beam
         # over-threshold indexes on a single-node master: publish shard
-        # blobs to /dev/shm once and serve through mmaps (see
-        # _publish_shards).  False forces the blob-shipping partitioned
-        # plan — the multi-executor path, kept testable.
+        # blobs as node-local replicas once and serve through mmaps
+        # (functions/replica.py).  False forces the blob-shipping
+        # partitioned plan — the multi-executor path, kept testable.
         self.node_local_cache = node_local_cache
         self.artifact: IndexArtifact | None = None
         self.ndis_accum = None
-        # search-plan memo (the IVFSearcher pattern): repeated searches
-        # of the same query frame rebuild an identical lazy plan AND a
-        # fresh query broadcast + driver-side routing pass per call at
-        # serving rates.  Keyed weakly on the query DataFrame; values
-        # carry the plan's shm root so a TTL-swept publish invalidates.
-        self._plan_memo: "weakref.WeakKeyDictionary" = (
-            weakref.WeakKeyDictionary()
-        )
+        # per-frame plan reuse: repeated searches of the same query
+        # frame would rebuild an identical lazy plan AND a fresh query
+        # broadcast + driver-side routing pass per call at serving rates
+        self._plans = SearchPlanMemo()
 
     def attach(self, artifact: IndexArtifact) -> "GraphANNSearcher":
         self.artifact = artifact
         return self
-
-    def _memo_store(self, query_df, mk, result, shm_root):
-        try:
-            per_df = self._plan_memo.get(query_df)
-            if per_df is None:
-                per_df = {}
-                self._plan_memo[query_df] = per_df
-            # artifact weakref: mk embeds id(artifact), and CPython can
-            # recycle the id after GC — a hit must prove the plan was
-            # built against the LIVE artifact (advisor r11; mirrors the
-            # exact.py guard)
-            per_df[mk] = (weakref.ref(self.artifact), result, shm_root)
-        except TypeError:
-            pass
-        return result
 
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
@@ -1160,20 +1062,9 @@ class GraphANNSearcher:
             k, qid_col, vec_col, self.ef_search, self.probe_partitions,
             force_beam, id(art),
         )
-        try:
-            per_df = self._plan_memo.get(query_df)
-        except TypeError:
-            per_df = None
-        if per_df is not None and mk in per_df:
-            art_ref, res, shm_root = per_df[mk]
-            if art_ref() is art and (
-                shm_root is None or os.path.isdir(shm_root)
-            ):
-                return res
-
-        from vectordb_retrieval_spark.functions.kernels import (
-            collect_or_chunk,
-        )
+        memo = self._plans.get(query_df, mk, guard=art)
+        if memo is not None:
+            return memo
 
         qids, qmat, chunked = collect_or_chunk(
             query_df,
@@ -1252,35 +1143,31 @@ class GraphANNSearcher:
             else:
                 art.params["_shard_bc"] = None
         bc_shards = art.params["_shard_bc"]
-        # over-threshold on a single-node master: publish the shards to
-        # node-local shared memory once and serve every search through
-        # read-only mmaps (see _publish_shards) — same query-partitioned
-        # plan as the broadcast path, zero per-search blob traffic
+        # over-threshold on a single-node master: publish the shards as
+        # node-local replicas once and serve every search through
+        # read-only mmaps — same query-partitioned plan as the
+        # broadcast path, zero per-search blob traffic
         shm_shards = (
             art.params.get("_shm_shards") if self.node_local_cache else None
         )
-        if shm_shards is not None and not os.path.isdir(shm_shards[0]):
+        if shm_shards is not None and not replica.alive(shm_shards[0]):
             shm_shards = None  # swept while idle: republish below
         if (
             bc_shards is None
             and shm_shards is None
             and self.node_local_cache
-            and spark.sparkContext.master.startswith("local")
-            and os.path.isdir("/dev/shm")
+            and replica.enabled(spark)
         ):
             try:
-                shm_shards = _publish_shards(
-                    art.tables["graph"], uuid.uuid4().hex
+                root, names = replica.publish(
+                    art.tables["graph"], "shards", ["pid"], ["blob"]
                 )
+                shm_shards = (root, sorted(int(n) for n in names))
+                replica.own(art, root)
             except OSError:
                 shm_shards = None
         if self.node_local_cache:
             art.params["_shm_shards"] = shm_shards
-        if shm_shards is not None:
-            try:
-                os.utime(shm_shards[0])  # keep the TTL sweep at bay
-            except OSError:
-                pass
 
         # fan the query batch out across (shard × chunk) tasks: the
         # per-task kernel is CPU-bound NumPy, so shard count alone
@@ -1419,7 +1306,9 @@ class GraphANNSearcher:
                     # would otherwise collide on the None key)
                     key_base = ("bc", bc_id) if bc_id is not None else None
                 else:
-                    get_blob = lambda p: _mmap_shard(shm_root, p)  # noqa: E731
+                    get_blob = lambda p: replica.mmap_file(  # noqa: E731
+                        shm_root, f"{p}.bin"
+                    )
                     key_base = ("shm", shm_root)
                 for pdf in batches:
                     for qc_ix in pdf["qchunk"]:
@@ -1469,14 +1358,15 @@ class GraphANNSearcher:
                             }
                         )
 
-            return self._memo_store(
+            return self._plans.put(
                 query_df,
                 mk,
                 tasks.mapInPandas(
                     kernel,
                     schema="qid long, id long, dist double, rank int",
                 ),
-                None if bc_shards is not None else shm_shards[0],
+                guard=art,
+                root=shm_root,
             )
 
         def search_shard(
@@ -1518,4 +1408,6 @@ class GraphANNSearcher:
         cands = tasks.mapInPandas(
             kernel, schema="qid long, id long, dist double"
         )
-        return self._memo_store(query_df, mk, topk_per_query(cands, k), None)
+        return self._plans.put(
+            query_df, mk, topk_per_query(cands, k), guard=art
+        )

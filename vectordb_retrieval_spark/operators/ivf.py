@@ -43,6 +43,7 @@ from vectordb_retrieval_spark.functions.distance import (
     pairwise_distances,
 )
 from vectordb_retrieval_spark.functions.kernels import (
+    SearchPlanMemo,
     cluster_scan_topk,
     merge_fragment_topk,
     pack_assignment,
@@ -576,27 +577,21 @@ class IVFSearcher:
         self.nprobe = nprobe
         self.broadcast_threshold = broadcast_threshold
         # over-threshold indexes on a single-node master: publish packed
-        # blobs to /dev/shm once and scan a blob-free metadata table
-        # (kernels.packed_shm_cached).  False forces the blob-shipping
-        # partitioned plan — the multi-executor path, kept testable.
+        # blobs as node-local replicas once and scan a blob-free
+        # metadata table (kernels.packed_shm_cached).  False forces the
+        # blob-shipping partitioned plan — the multi-executor path,
+        # kept testable.
         self.node_local_cache = node_local_cache
         self.artifact: IndexArtifact | None = None
         # distance-computation counter, parity with the reference's
         # ``ndis`` record_operation (base_algorithm.py:91-96)
         self.ndis_accum = None
-        # search-plan memo: repeated searches of the same query table
-        # rebuild an identical lazy plan (~60 ms of driver-side pyspark
-        # object construction per call at serving rates).  Keyed weakly
-        # on the query DataFrame — results are deterministic per
-        # (artifact, query table, k), and execution still runs in full
-        # on every materialization; only the plan object is reused.
-        import weakref
-
-        self._plan_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+        # per-frame plan reuse (~60 ms of driver-side pyspark object
+        # construction per call at serving rates)
+        self._plans = SearchPlanMemo()
 
     def attach(self, artifact: IndexArtifact) -> "IVFSearcher":
         self.artifact = artifact
-        self._plan_memo = type(self._plan_memo)()
         return self
 
     def _serving_broadcast(self, spark):
@@ -655,16 +650,6 @@ class IVFSearcher:
         art = self.artifact
         if art is None:
             raise RuntimeError("searcher not attached to an index artifact")
-        # memoized plans bake in the shm blob root; a TTL-swept root
-        # must invalidate them (and the artifact memo, so the plan
-        # build below republishes) instead of serving dead file paths
-        import os
-
-        shm_memo = art.params.get("_packed_shm")
-        if isinstance(shm_memo, tuple) and not os.path.isdir(shm_memo[0]):
-            art.params.pop("_packed_shm", None)
-            self._plan_memo = type(self._plan_memo)()
-            shm_memo = None
         allowed = allowed_bc = None
         filt_key = None
         if allowed_df is not None:
@@ -680,19 +665,10 @@ class IVFSearcher:
             # content key, not object identity: a recycled id() after GC
             # must not serve a stale plan for a different filter
             filt_key = (len(allowed), hashlib.md5(allowed.tobytes()).hexdigest())
-        memo_key = (
-            k,
-            qid_col,
-            vec_col,
-            shm_memo[0] if isinstance(shm_memo, tuple) else None,
-            filt_key,
-        )
-        try:
-            per_df = self._plan_memo.get(query_df)
-        except TypeError:
-            per_df = None
-        if per_df is not None and memo_key in per_df:
-            return per_df[memo_key]
+        memo_key = (k, qid_col, vec_col, self.nprobe, filt_key)
+        memo = self._plans.get(query_df, memo_key, guard=art)
+        if memo is not None:
+            return memo
         metric = art.params["metric"]
         codec = art.params["codec"]
         spark = query_df.sparkSession
@@ -706,7 +682,7 @@ class IVFSearcher:
                 broadcast_probe_search,
             )
 
-            return self._memoize_plan(
+            return self._plans.put(
                 query_df,
                 memo_key,
                 broadcast_probe_search(
@@ -720,6 +696,7 @@ class IVFSearcher:
                     accum=accum,
                     allowed_bc=allowed_bc,
                 ),
+                guard=art,
             )
 
         # query-collect gate (same contract as exact_knn / the
@@ -776,20 +753,13 @@ class IVFSearcher:
             shm_root=None if shm is None else shm[0],
             allowed=allowed,
         )
-        return self._memoize_plan(
-            query_df, memo_key, merge_fragment_topk(scored, k, n_queries=len(qids))
+        return self._plans.put(
+            query_df,
+            memo_key,
+            merge_fragment_topk(scored, k, n_queries=len(qids)),
+            guard=art,
+            root=None if shm is None else shm[0],
         )
-
-    def _memoize_plan(self, query_df, memo_key, result):
-        try:
-            per_df = self._plan_memo.get(query_df)
-            if per_df is None:
-                per_df = {}
-                self._plan_memo[query_df] = per_df
-            per_df[memo_key] = result
-        except TypeError:
-            pass
-        return result
 
     @staticmethod
     def _probe_rows(probe: pd.DataFrame, n_queries: int) -> dict[int, np.ndarray]:

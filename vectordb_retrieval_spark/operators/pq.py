@@ -96,7 +96,10 @@ class PQADCSearcher:
         return self
 
     def _serving_broadcast(self, spark):
-        from vectordb_retrieval_spark.operators.serving import pack_clusters
+        from vectordb_retrieval_spark.operators.serving import (
+            own_shared_scan,
+            pack_clusters,
+        )
 
         art = self.artifact
         if "_serving_bc" in art.params:
@@ -120,6 +123,7 @@ class PQADCSearcher:
         if packed.nbytes() > self.broadcast_threshold:
             art.params["_serving_bc"] = None
             return None
+        own_shared_scan(art, packed)
         bc = spark.sparkContext.broadcast(packed)
         art.params["_serving_bc"] = bc
         return bc

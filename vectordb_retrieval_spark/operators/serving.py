@@ -31,9 +31,6 @@ reference's in-memory throughput.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import time
 import uuid
 from typing import Iterator
 
@@ -42,23 +39,29 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vectordb_retrieval_spark.functions import replica
 from vectordb_retrieval_spark.functions.distance import (
     normalize_rows,
     pairwise_distances,
 )
 
 
-# node-local shared home for decoded packed-scan arrays: every python
+# node-local replica of the decoded packed-scan arrays: every python
 # worker on an executor deserializes its OWN copy of the broadcast, so
 # at 32 workers the decoded index was resident 32× and the GEMM wave
 # thrashed L3.  The first worker to build a (key, metric) scan state
-# publishes it under /dev/shm (atomic dir rename); everyone else mmaps
-# it read-only, so the whole node shares ONE physical copy through the
-# page cache.  Entries are content-addressed by the bundle's share_key
-# (assigned once, driver-side) and swept by age on each publish.
-_SHM_ROOT = "/dev/shm/vr_spark_shm"
+# publishes it as a replica directory (functions/replica.py); everyone
+# else mmaps it read-only, so the whole node shares ONE physical copy
+# through the page cache.  Entries are content-addressed by the
+# bundle's share_key (assigned once, driver-side) and released with the
+# artifact that owns the broadcast (``own_shared_scan``).
 _SHM_MIN_BYTES = 4 << 20  # below this, per-worker copies are cheap
-_SHM_TTL_S = 3600.0
+
+
+def own_shared_scan(art, packed: "PackedClusters") -> None:
+    """Release the shared scan entries of ``packed`` (any metric) when
+    ``art``, which holds its broadcast, is collected."""
+    replica.own(art, f"{packed.share_key}-*")
 
 
 class PackedClusters:
@@ -198,23 +201,29 @@ class PackedClusters:
         return got
 
     def _share_scan(self, got, metric: str):
-        """Publish/attach the packed scan arrays through node-local
-        shared memory (see ``_SHM_ROOT``).  Returns the same tuple with
-        the big arrays replaced by read-only mmaps of one shared copy,
-        or ``got`` unchanged when sharing is off (no share_key, tiny
-        index, no /dev/shm, any I/O error).  Every worker computes
+        """Publish/attach the packed scan arrays as a node-local replica
+        (see ``own_shared_scan``).  Returns the same tuple with the big
+        arrays replaced by read-only mmaps of one shared copy, or
+        ``got`` unchanged when sharing is off (no share_key, tiny
+        index, no tmpfs, any I/O error).  Every worker computes
         byte-identical arrays from the same broadcast, so whichever
         publish wins the atomic rename is equivalent."""
         F, sq, F32, sq32, gids, offs, norm_max = got
-        if (
-            self.share_key is None
-            or F.nbytes + F32.nbytes < _SHM_MIN_BYTES
-            or not os.path.isdir("/dev/shm")
-        ):
+        if self.share_key is None or F.nbytes + F32.nbytes < _SHM_MIN_BYTES:
             return got
-        final = os.path.join(_SHM_ROOT, f"{self.share_key}-{metric}")
 
-        def attach():
+        def fill(tmp: str) -> None:
+            np.save(os.path.join(tmp, "F64.npy"), F)
+            np.save(os.path.join(tmp, "F32.npy"), F32)
+            np.save(os.path.join(tmp, "gids.npy"), gids)
+            if sq is not None:
+                np.save(os.path.join(tmp, "sq64.npy"), sq)
+                np.save(os.path.join(tmp, "sq32.npy"), sq32)
+
+        try:
+            final = replica.publish_dir(f"{self.share_key}-{metric}", fill)
+            if final is None:
+                return got
             parts = []
             for name in ("F64", "sq64", "F32", "sq32", "gids"):
                 path = os.path.join(final, f"{name}.npy")
@@ -229,35 +238,6 @@ class PackedClusters:
                 else:
                     parts.append(None)
             return (*parts, offs, norm_max)
-
-        try:
-            if not os.path.isdir(final):
-                os.makedirs(_SHM_ROOT, exist_ok=True)
-                # age sweep keeps abandoned entries from pinning tmpfs
-                now = time.time()
-                for entry in os.listdir(_SHM_ROOT):
-                    p = os.path.join(_SHM_ROOT, entry)
-                    try:
-                        if now - os.path.getmtime(p) > _SHM_TTL_S:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        continue
-                tmp = tempfile.mkdtemp(prefix=".pub-", dir=_SHM_ROOT)
-                try:
-                    np.save(os.path.join(tmp, "F64.npy"), F)
-                    np.save(os.path.join(tmp, "F32.npy"), F32)
-                    np.save(os.path.join(tmp, "gids.npy"), gids)
-                    if sq is not None:
-                        np.save(os.path.join(tmp, "sq64.npy"), sq)
-                        np.save(os.path.join(tmp, "sq32.npy"), sq32)
-                    os.rename(tmp, final)
-                except OSError:
-                    # lost the publish race (or tmpfs full): attach to
-                    # the winner if there is one, else stay private
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    if not os.path.isdir(final):
-                        return got
-            return attach()
         except (OSError, ValueError):
             return got
 
@@ -453,6 +433,7 @@ def artifact_serving_broadcast(
     if packed.nbytes() > threshold:
         art.params["_serving_bc"] = None
         return None
+    own_shared_scan(art, packed)
     bc = spark.sparkContext.broadcast(packed)
     art.params["_serving_bc"] = bc
     return bc
