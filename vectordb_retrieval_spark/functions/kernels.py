@@ -9,6 +9,9 @@ row-wise computation per Arrow batch, JVM→Arrow→NumPy→Arrow.
 
 from __future__ import annotations
 
+import itertools
+import os
+import shutil
 import weakref
 from typing import Iterator
 
@@ -443,8 +446,6 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
 
     Returns None when caching is disabled for this root (publish
     failed: tmpfs full) — caller decodes per call."""
-    import os
-
     if root in _DEC_DISABLED:
         return None
     name = f"{cid}-{sub}.{metric}.dec64"
@@ -495,11 +496,47 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
     return mat64, aux
 
 
+# rows per packed unit (see pack_assignment)
+UNIT_ROWS = 512
+
+
+def encode_units(
+    ids: np.ndarray, raw: np.ndarray, codec, max_rows_per_blob: int, subs=None
+) -> Iterator[dict]:
+    """The one writer of the packed unit format: one cluster's rows →
+    units of at most ``max_rows_per_blob`` rows, each a dict of
+    (n, ids int64-bytes, payload matrix-bytes, width, dt, sub).  All
+    units but the last are full.  ``subs`` yields the unit indices to
+    use (default 0, 1, 2, ...)."""
+    if codec is None or np.issubdtype(raw.dtype, np.floating):
+        # raw vectors, or float-coded codecs (PCA reduced
+        # coordinates) — integer truncation would corrupt them
+        mat = raw.astype(np.float32)
+        dt = "f4"
+    elif raw.size and raw.min() >= 0 and raw.max() < 256:
+        mat = raw.astype(np.uint8)
+        dt = "u1"
+    else:
+        mat = raw.astype(np.int16)
+        dt = "i2"
+    starts = range(0, len(ids), max_rows_per_blob)
+    for s, sub in zip(starts, itertools.count() if subs is None else subs):
+        e = min(len(ids), s + max_rows_per_blob)
+        yield {
+            "n": e - s,
+            "ids": ids[s:e].tobytes(),
+            "payload": np.ascontiguousarray(mat[s:e]).tobytes(),
+            "width": int(mat.shape[1]),
+            "dt": dt,
+            "sub": int(sub),
+        }
+
+
 def pack_assignment(
     assignment: DataFrame,
     payload_col: str,
     codec,
-    max_rows_per_blob: int = 512,
+    max_rows_per_blob: int = UNIT_ROWS,
     cluster_sizes: dict[int, int] | None = None,
     pre_partitioned: bool = False,
 ) -> DataFrame:
@@ -552,33 +589,15 @@ def pack_assignment(
             return
         pdf = pd.concat(parts, ignore_index=True)
         for cid, grp in pdf.groupby("cluster_id", sort=False):
-            ids = grp["id"].to_numpy(dtype=np.int64)
-            raw = np.vstack(grp[payload_col].to_numpy())
-            if codec is None or np.issubdtype(raw.dtype, np.floating):
-                # raw vectors, or float-coded codecs (PCA reduced
-                # coordinates) — integer truncation would corrupt them
-                mat = raw.astype(np.float32)
-                dt = "f4"
-            elif raw.size and raw.min() >= 0 and raw.max() < 256:
-                mat = raw.astype(np.uint8)
-                dt = "u1"
-            else:
-                mat = raw.astype(np.int16)
-                dt = "i2"
-            for sub, s in enumerate(range(0, len(ids), max_rows_per_blob)):
-                e = min(len(ids), s + max_rows_per_blob)
+            for unit in encode_units(
+                grp["id"].to_numpy(dtype=np.int64),
+                np.vstack(grp[payload_col].to_numpy()),
+                codec,
+                max_rows_per_blob,
+            ):
                 yield pd.DataFrame(
-                    {
-                        "cluster_id": [int(cid)],
-                        "n": [e - s],
-                        "ids": [ids[s:e].tobytes()],
-                        "payload": [
-                            np.ascontiguousarray(mat[s:e]).tobytes()
-                        ],
-                        "width": [int(mat.shape[1])],
-                        "dt": [dt],
-                        "sub": [sub],
-                    }
+                    {"cluster_id": [int(cid)]}
+                    | {c: [v] for c, v in unit.items()}
                 )
 
     spark = assignment.sparkSession
@@ -594,18 +613,14 @@ def pack_assignment(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-    units = []
+    units = {}
     for cid, n in cluster_sizes.items():
         for sub, s in enumerate(range(0, n, max_rows_per_blob)):
-            units.append((cid, sub, min(n - s, max_rows_per_blob)))
-    order = sorted(units, key=lambda u: (-(u[2] ** 2), u[0], u[1]))
-    loads = [0] * n_parts
+            units[(cid, sub)] = min(n - s, max_rows_per_blob)
     pre = _identity_preimages(spark, n_parts)
-    bucket: dict[tuple[int, int], int] = {}
-    for cid, sub, n in order:
-        b = min(range(n_parts), key=lambda i: (loads[i], i))
-        bucket[(cid, sub)] = pre[b]
-        loads[b] += n * n
+    bucket = {
+        u: pre[b] for u, b in _place_units(units, [0] * n_parts).items()
+    }
     bc = spark.sparkContext.broadcast(bucket)
 
     def kernel_b(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -650,6 +665,19 @@ def pack_assignment(
     )
     placed.count()
     return placed
+
+
+def _place_units(sizes: dict, loads: list) -> dict:
+    """Greedy bin-packing of units ((cluster_id, sub) → rows) onto
+    partitions by n² weight, heaviest first, each to the least-loaded
+    partition (``loads`` is updated in place).  Returns unit →
+    partition index."""
+    out = {}
+    for u in sorted(sizes, key=lambda u: (-(sizes[u] ** 2), u)):
+        b = min(range(len(loads)), key=lambda i: (loads[i], i))
+        out[u] = b
+        loads[b] += sizes[u] ** 2
+    return out
 
 
 # memo: partition-count → murmur3 preimage bucket ids (see
@@ -705,17 +733,18 @@ def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
     codec = art.params.get("codec")
     payload_col = "vec" if codec is None else "codes"
     # pack_assignment returns the placed table already cached + counted.
-    # _pack_pre_partitioned is a runtime-only marker set by builders
+    # _pack_pre_partitioned is a runtime-only marker set by writers
     # whose IN-MEMORY assignment cache is cluster_id-hash-partitioned
     # (a LOADED dir-partitioned parquet does NOT qualify: a big cluster
-    # spans several scan splits there); derivatives drop it with the
-    # other underscore params, so they re-shuffle their own rows.
+    # spans several scan splits there); with the exact _cluster_sizes
+    # beside it the pack is one action and no re-shuffle.
+    own = table == "assignment"
     packed = pack_assignment(
         art.tables[table],
         payload_col,
         codec,
-        pre_partitioned=bool(art.params.get("_pack_pre_partitioned"))
-        and table == "assignment",
+        cluster_sizes=art.params.get("_cluster_sizes") if own else None,
+        pre_partitioned=own and bool(art.params.get("_pack_pre_partitioned")),
     )
     art.params["_packed_df"] = packed
     return packed
@@ -729,13 +758,15 @@ def packed_shm_cached(art, table: str = "assignment"):
     bytes per file) and searches then scan a blob-free METADATA table —
     per-search Arrow traffic drops from the probed payload bytes to a
     few hundred metadata ints, and the page cache holds one physical
-    copy of the index per node.  The metadata DataFrame is a narrow
-    projection of the placed packed table, so it inherits the
-    load-balanced task placement.  The root is released with ``art``.
+    copy of the index per node.  The metadata keeps the packed table's
+    load-balanced task placement (``_units_frame``).  The root is
+    released with ``art``.
 
     Returns (root, metadata DataFrame) or None when gated off
     (multi-executor master, no tmpfs, publish failure).  Memoized on
-    the artifact (runtime-only ``_`` param); a swept root republishes."""
+    the artifact (runtime-only ``_`` param); a swept root republishes.
+    ``ivf_append``/``ivf_delete`` derive a child's replica from this
+    one instead (``packed_shm_derive``)."""
     memo = art.params.get("_packed_shm", "unset")
     if memo is None:
         return None
@@ -753,11 +784,173 @@ def packed_shm_cached(art, table: str = "assignment"):
         art.params["_packed_shm"] = None
         return None
     replica.own(art, root)
-    meta = packed.select("cluster_id", "n", "width", "dt", "sub").cache()
-    meta.count()
-    got = (root, meta)
-    art.params["_packed_shm"] = got
-    return got
+    units = {
+        (int(r["cluster_id"]), int(r["sub"])): (
+            int(r["n"]), int(r["width"]), r["dt"], int(r["part"])
+        )
+        for r in packed.select(
+            "cluster_id", "sub", "n", "width", "dt",
+            F.spark_partition_id().alias("part"),
+        ).collect()
+    }
+    return _attach_replica(art, packed.sparkSession, root, units)
+
+
+_UNIT_COLS = ("cluster_id", "n", "width", "dt", "sub")
+
+
+def _attach_replica(art, spark, root: str, units: dict):
+    """Set ``art``'s replica params: ``_packed_shm`` = (root, metadata
+    frame) and ``_packed_units``, the driver-side unit table
+    (cluster_id, sub) → (n, width, dt, partition) a later write derives
+    the child's replica from."""
+    n_parts = max(1, spark.sparkContext.defaultParallelism)
+    # one local row per placement partition, holding its units as
+    # arrays and exploded in the scan: a local relation of n_parts rows
+    # is split one row per task, so scan task p reads exactly the units
+    # placed in p — the placement without a shuffle, a cache or a job
+    per = [{c: [] for c in _UNIT_COLS} for _ in range(n_parts)]
+    for (cid, sub), (n, width, dt, part) in sorted(units.items()):
+        for c, v in zip(_UNIT_COLS, (cid, n, width, dt, sub)):
+            per[part % n_parts][c].append(v)
+    meta = spark.createDataFrame(
+        pd.DataFrame({c: [p[c] for p in per] for c in _UNIT_COLS}),
+        "cluster_id array<long>, n array<long>, width array<int>, "
+        "dt array<string>, sub array<int>",
+    ).selectExpr(f"inline(arrays_zip({', '.join(_UNIT_COLS)}))")
+    art.params["_packed_units"] = units
+    art.params["_packed_shm"] = (root, meta)
+    return art.params["_packed_shm"]
+
+
+def derivable_replica(art) -> bool:
+    """Whether ``art`` serves from a live node-local replica a written
+    child can be derived from (``packed_shm_derive``)."""
+    shm = art.params.get("_packed_shm")
+    return (
+        isinstance(shm, tuple)
+        and replica.enabled(shm[1].sparkSession)
+        and replica.alive(shm[0])
+    )
+
+
+def packed_shm_derive(parent, child, adds=None, dels=None) -> bool:
+    """Derive ``child``'s node-local replica from ``parent``'s after a
+    write, instead of re-packing and republishing the whole index.
+
+    ``replica.fork`` hard-links every parent blob and decoded scan
+    cache into a fresh root; then only the units a write touches are
+    rewritten there through ``encode_units``: for each cluster that
+    gains rows (``adds``: an Arrow table of cluster_id, id and payload
+    columns) or holds a deleted id (``dels``: int64 ids, checked against
+    every unit's ids through ``replica.mmap_file``), the units holding
+    deleted ids and its partial tail unit are pooled with its new rows,
+    deleted rows are dropped, and the pool is re-cut into units.  A
+    cluster thus keeps at most one unit below ``UNIT_ROWS`` rows, as
+    after a full pack.  Rewritten units keep their partition; new units
+    are placed by the same greedy bin-packing as ``pack_assignment``.
+
+    Sets the child's ``_packed_shm``, ``_packed_units`` and exact
+    ``_cluster_sizes`` and returns True; returns False with the child
+    untouched when the parent has no live replica, the payload widths
+    differ, or an ``OSError`` hits the fork or a write (the partial
+    root is removed)."""
+    if not derivable_replica(parent):
+        return False
+    src, meta = parent.params["_packed_shm"]
+    units = parent.params["_packed_units"]
+    codec = parent.params.get("codec")
+    add_cids = add_ids = np.empty(0, dtype=np.int64)
+    if adds is not None and adds.num_rows:
+        import pyarrow.compute as pc
+
+        add_cids = adds.column("cluster_id").to_numpy().astype(np.int64)
+        add_ids = adds.column("id").to_numpy().astype(np.int64)
+        pay = adds.column("vec" if codec is None else "codes").combine_chunks()
+        widths = {v[1] for v in units.values()} or {len(pay[0])}
+        width = widths.pop()
+        lens = pc.list_value_length(pay).to_numpy(zero_copy_only=False)
+        if widths or (lens != width).any():
+            return False
+        new_raw = pay.flatten().to_numpy(zero_copy_only=False)
+        new_raw = new_raw.reshape(len(add_ids), width)
+    dels = np.empty(0, np.int64) if dels is None else np.asarray(dels, np.int64)
+
+    def unit_rows(c: int, s: int):
+        n, width, dt, _ = units[(c, s)]
+        mm = replica.mmap_file(src, f"{c}-{s}.bin")
+        ids = np.frombuffer(mm, dtype=np.int64, count=n)
+        raw = np.frombuffer(mm, dtype=dt, count=n * width, offset=8 * n)
+        return ids, raw.reshape(n, width)
+
+    subs_of: dict[int, list[int]] = {}
+    for c, s in units:
+        subs_of.setdefault(c, []).append(s)
+    # cluster → the subs whose rows are pooled and rewritten
+    pool: dict[int, set] = {}
+    if len(dels):
+        for c, s in units:
+            if np.isin(unit_rows(c, s)[0], dels).any():
+                pool.setdefault(c, set()).add(s)
+    for c in np.unique(add_cids):
+        pool.setdefault(int(c), set())
+    for c, subs in pool.items():
+        subs.update(
+            s for s in subs_of.get(c, ()) if units[(c, s)][0] < UNIT_ROWS
+        )
+    try:
+        root = replica.fork(src, "packed")
+    except OSError:
+        return False
+    out = dict(units)
+    try:
+        files: dict[str, list[str]] = {}  # "cluster-sub" → its files
+        for name in os.listdir(root):
+            files.setdefault(name.split(".", 1)[0], []).append(name)
+        for c, subs in pool.items():
+            reuse = sorted(subs)
+            old = [unit_rows(c, s) for s in reuse]
+            mine = add_cids == c
+            ids = np.concatenate([o[0] for o in old] + [add_ids[mine]])
+            raw = np.concatenate(
+                [o[1] for o in old] + ([new_raw[mine]] if mine.any() else [])
+            )
+            if len(dels):
+                keep = ~np.isin(ids, dels)
+                ids, raw = ids[keep], raw[keep]
+            for s in reuse:
+                out.pop((c, s))
+                for name in files.get(f"{c}-{s}", ()):
+                    os.unlink(os.path.join(root, name))
+            nxt = max(subs_of.get(c, [-1])) + 1
+            for u in encode_units(
+                ids, raw, codec, UNIT_ROWS,
+                itertools.chain(reuse, itertools.count(nxt)),
+            ):
+                s = u["sub"]
+                replica.write_blob(
+                    os.path.join(root, f"{c}-{s}.bin"), u["ids"], u["payload"]
+                )
+                part = units[(c, s)][3] if (c, s) in units else None
+                out[(c, s)] = (u["n"], u["width"], u["dt"], part)
+    except OSError:
+        shutil.rmtree(root, ignore_errors=True)
+        return False
+    spark = meta.sparkSession
+    loads = [0] * max(1, spark.sparkContext.defaultParallelism)
+    for n, _, _, part in out.values():
+        if part is not None:
+            loads[part % len(loads)] += n * n
+    fresh = {u: v[0] for u, v in out.items() if v[3] is None}
+    for u, b in _place_units(fresh, loads).items():
+        out[u] = out[u][:3] + (b,)
+    replica.own(child, root)
+    _attach_replica(child, spark, root, out)
+    sizes: dict[int, int] = {}
+    for (c, _), v in out.items():
+        sizes[c] = sizes.get(c, 0) + v[0]
+    child.params["_cluster_sizes"] = sizes
+    return True
 
 
 def cluster_scan_topk(

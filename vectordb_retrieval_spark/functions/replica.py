@@ -11,10 +11,12 @@ This module is the whole transport for every searcher family (graph
 shards, packed IVF / cluster-pruned blobs and their decoded scan cache,
 the broadcast bundle's shared scan arrays): the root and its TTL sweep,
 the gate, the atomic publish (per file, or per directory for multi-file
-entries, so readers never see a partial entry), one per-process mmap
-memo, the liveness touch, and release: a root is removed when the
-artifact that owns it is collected (``own``); the TTL sweep is the
-backstop for roots a crashed process never released.
+entries, so readers never see a partial entry), the fork of a root
+into a new one by hard links (a written index derives its replica from
+its parent's), one per-process mmap memo, the liveness touch, and
+release: a root is removed when the artifact that owns it is collected
+(``own``); the TTL sweep is the backstop for roots a crashed process
+never released.
 """
 
 from __future__ import annotations
@@ -153,6 +155,26 @@ def publish(
         shutil.rmtree(root, ignore_errors=True)
         raise OSError(f"published {len(done)} of {len(names)} blobs")
     return root, done
+
+
+def fork(src_root: str, kind: str) -> str:
+    """A fresh root ``ROOT/{kind}-{uuid}`` holding a hard link to every
+    published file of ``src_root``: no bytes are copied, and the source
+    root keeps its own owner.  Published files are never modified in
+    place (``write_blob`` replaces them), so rewriting a file in the
+    fork leaves the source untouched.  Raises ``OSError`` after
+    removing the partial root."""
+    _sweep()
+    root = _new_root(kind)
+    try:
+        os.makedirs(root)
+        for name in os.listdir(src_root):
+            if not name.startswith(".pub-"):
+                os.link(os.path.join(src_root, name), os.path.join(root, name))
+    except OSError:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    return root
 
 
 def publish_dir(name: str, fill) -> str | None:

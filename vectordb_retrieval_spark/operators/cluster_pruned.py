@@ -68,11 +68,10 @@ def _scan_tasks(n_queries: int) -> int | None:
 
 def _cluster_sizes_cached(art) -> np.ndarray | None:
     """Per-cluster row counts as a dense array indexed by cluster_id —
-    from the build's stats aggregate when fresh (zero extra actions),
-    else derived ONCE from the packed metadata (nlist × sub tiny rows)
-    and memoized.  Underscore param: runtime-only, dropped by
-    append/delete derivatives so they re-derive against their own
-    rows."""
+    from the build's or a write's stats when present (zero extra
+    actions), else derived ONCE from the packed metadata (nlist × sub
+    tiny rows) and memoized.  Underscore param: runtime-only, never
+    inherited: append/delete set their children's own sizes."""
     nlist = len(art.params["centroids"])
     sizes = art.params.get("_cluster_sizes")
     if sizes is None:

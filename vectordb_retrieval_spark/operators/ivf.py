@@ -29,7 +29,7 @@ ordering (reference normalizes at the same points, modular.py:159-166).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -43,12 +43,16 @@ from vectordb_retrieval_spark.functions.distance import (
     pairwise_distances,
 )
 from vectordb_retrieval_spark.functions.kernels import (
+    QUERY_BC_MAX_BYTES,
+    QUERY_BC_MAX_ROWS,
     SearchPlanMemo,
     cluster_scan_topk,
+    derivable_replica,
     merge_fragment_topk,
     pack_assignment,
     packed_assignment_cached,
     packed_shm_cached,
+    packed_shm_derive,
 )
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
@@ -166,6 +170,20 @@ def _assign_df(
     return base.mapInPandas(kernel, schema=schema)
 
 
+def _cache_by_cluster(assigned: DataFrame, *aggs):
+    """Cache ``assigned`` cluster_id-hash-partitioned and materialize it
+    with one per-cluster stats aggregate (row count ``n`` plus
+    ``aggs``).  Returns (cached table, collected stats rows): the sizes
+    let a later pack place its units and read the cache in place."""
+    assigned = assigned.repartition("cluster_id").cache()
+    stats = (
+        assigned.groupBy("cluster_id")
+        .agg(F.count(F.lit(1)).alias("n"), *aggs)
+        .collect()
+    )
+    return assigned, stats
+
+
 class IVFIndexer:
     """KMeans coarse quantizer + cluster-assigned base table."""
 
@@ -230,11 +248,9 @@ class IVFIndexer:
         # AQE jobs here but interleave-measured ~0.2 s SLOWER — the
         # Python-worker stage costs more than the tiny JVM map-side-
         # combined exchange it removed — so the groupBy stays.)
-        assigned = assigned.repartition("cluster_id").cache()
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if with_dist:
-            aggs.append(F.max("r").alias("rmax"))
-        stats = assigned.groupBy("cluster_id").agg(*aggs).collect()
+        assigned, stats = _cache_by_cluster(
+            assigned, *([F.max("r").alias("rmax")] if with_dist else [])
+        )
         sizes = {int(r["cluster_id"]): int(r["n"]) for r in stats}
         radii = None
         if with_dist:
@@ -282,11 +298,12 @@ class IVFIndexer:
             art.params["radii"] = radii
         # driver-side cluster sizes (nlist ints — driver-small at any
         # scale): the partitioned cluster-pruned search derives its
-        # fused-plan admission bound from them without an extra action.
-        # Underscore param: runtime-only, dropped by append/delete
-        # derivatives (whose sizes change) and never persisted — loaded
-        # or derived artifacts re-derive it from their own packed
-        # metadata (see cluster_pruned._cluster_sizes_cached).
+        # fused-plan admission bound from them, and the serving
+        # broadcast gate sizes the index, without an extra action.
+        # Underscore param: runtime-only and never persisted —
+        # append/delete set their children's own sizes, and loaded
+        # artifacts re-derive it from their packed metadata (see
+        # cluster_pruned._cluster_sizes_cached).
         art.params["_cluster_sizes"] = sizes
         return art
 
@@ -433,9 +450,12 @@ class FixedCentroidIVFIndexer(IVFIndexer):
         super().__init__(nlist=len(centroids), metric=metric, codec=codec)
         self.centroids = np.asarray(centroids, dtype=np.float64)
 
-    def build(
+    def assign(
         self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
-    ) -> IndexArtifact:
+    ) -> DataFrame:
+        """The lazy assignment rows (cluster_id, id, vec-or-codes) of
+        ``base_df`` under the fixed centroids, fitting the codec first
+        if it is not fitted yet."""
         base = base_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         if self.metric == "cosine":
             base = _norm_df(base, "vec")
@@ -454,7 +474,14 @@ class FixedCentroidIVFIndexer(IVFIndexer):
             assigned = self.codec.encode_df(assigned, vec_col="vec").select(
                 "cluster_id", "id", "codes"
             )
-        assigned = assigned.repartition("cluster_id").cache()
+        return assigned
+
+    def build(
+        self, base_df: DataFrame, id_col: str = "id", vec_col: str = "vec"
+    ) -> IndexArtifact:
+        assigned = (
+            self.assign(base_df, id_col, vec_col).repartition("cluster_id").cache()
+        )
         return IndexArtifact(
             kind="ivf",
             tables={"assignment": assigned},
@@ -471,6 +498,110 @@ class FixedCentroidIVFIndexer(IVFIndexer):
         )
 
 
+class _Delta(NamedTuple):
+    """How a delta-written artifact's assignment table is formed: the
+    last materialized table minus the deleted ids, plus the live rows
+    added since — collected rows only, so the plan keeps one shape
+    along a chain of writes."""
+
+    base: DataFrame  # last materialized assignment table
+    evict: bool  # base is an intermediate write's cache, not the build's
+    gone: np.ndarray  # sorted ids deleted since base
+    adds: "pa.Table | None"  # live rows added since base
+
+
+def _delta_of(art: IndexArtifact) -> _Delta:
+    got = art.params.get("_assign_delta")
+    if got is not None:
+        return got
+    return _Delta(
+        art.tables["assignment"],
+        bool(art.metadata.get("appended")),
+        np.empty(0, dtype=np.int64),
+        None,
+    )
+
+
+def _write_child(
+    artifact: IndexArtifact, table: DataFrame, params: dict, flag: str
+) -> IndexArtifact:
+    # runtime-only "_" params (replicas, serving broadcast, sizes)
+    # describe the parent's rows: the child carries only its own
+    return IndexArtifact(
+        kind="ivf",
+        tables={"assignment": table},
+        params={
+            **{k: v for k, v in artifact.params.items() if not k.startswith("_")},
+            **params,
+        },
+        metadata={**artifact.metadata, flag: True},
+    )
+
+
+def _full_write(
+    artifact: IndexArtifact, table: DataFrame, flag: str
+) -> IndexArtifact:
+    """Materialize the child's table with the build's stats aggregate:
+    a later lazy pack then reads the cache in place with known sizes."""
+    table, stats = _cache_by_cluster(table)
+    return _write_child(
+        artifact,
+        table,
+        {
+            "_cluster_sizes": {int(r["cluster_id"]): int(r["n"]) for r in stats},
+            "_pack_pre_partitioned": True,
+        },
+        flag,
+    )
+
+
+def _delta_write(
+    artifact: IndexArtifact,
+    rows: DataFrame,
+    flag: str,
+) -> IndexArtifact | None:
+    """The delta path of ``ivf_append`` (``rows``: the assigned new
+    rows) and ``ivf_delete`` (``rows``: the ids), taken when the parent
+    serves from a live node-local replica: ``rows`` is collected in one
+    job and the child's replica is derived from the parent's
+    (``kernels.packed_shm_derive``).  Returns None — the caller takes
+    the full path — when there is no such replica, when the rows held
+    since the last materialized table would pass the query-collect
+    gate, or when deriving fails."""
+    if not derivable_replica(artifact):
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    d = _delta_of(artifact)
+    n_adds = 0 if d.adds is None else d.adds.num_rows
+    budget = QUERY_BC_MAX_ROWS - len(d.gone) - n_adds
+    if budget < 0:
+        return None
+    got = rows.limit(budget + 1).toArrow()
+    held = got.nbytes + (0 if d.adds is None else d.adds.nbytes)
+    if got.num_rows > budget or held > QUERY_BC_MAX_BYTES:
+        return None
+    if flag == "appended":
+        adds = got if d.adds is None else pa.concat_tables([d.adds, got])
+        d, derive = d._replace(adds=adds), {"adds": got}
+    else:
+        dels = np.unique(got.column("id").drop_null().to_numpy())
+        if n_adds:
+            gone = pc.is_in(d.adds.column("id"), value_set=pa.array(dels))
+            d = d._replace(adds=d.adds.filter(pc.invert(gone)))
+        d, derive = d._replace(gone=np.union1d(d.gone, dels)), {"dels": dels}
+    spark = rows.sparkSession
+    table = d.base
+    if len(d.gone):
+        gone = spark.createDataFrame(pd.DataFrame({"id": d.gone}), "id long")
+        table = table.join(F.broadcast(gone), "id", "left_anti")
+    if d.adds is not None and d.adds.num_rows:
+        table = table.unionByName(spark.createDataFrame(d.adds))
+    child = _write_child(artifact, table, {"_assign_delta": d}, flag)
+    return child if packed_shm_derive(artifact, child, **derive) else None
+
+
 def ivf_append(
     artifact: IndexArtifact,
     new_df: DataFrame,
@@ -481,6 +612,22 @@ def ivf_append(
     EXISTING coarse quantizer and append them to the assignment table —
     no retrain, no rebuild (FAISS ``index.add`` semantics).
 
+    When the artifact serves from a node-local replica (the IVF
+    searcher's shm plan on a local master), the new rows are assigned
+    and encoded in one collected job and the child's replica is
+    derived from the parent's: a hard-linked fork in which only each
+    touched cluster's partial tail unit is rewritten with its new rows
+    (``kernels.packed_shm_derive``).  The child's first search then
+    costs what a steady search costs.  Its assignment table is the last
+    materialized table plus the collected rows, not the caller's frame.
+
+    Otherwise — no replica (broadcast or blob-shipping plan, loaded
+    artifact), a swept root, a non-local master, a failed fork or
+    write, or more collected rows since the last materialized table
+    than the query-collect gate allows — the merged table is
+    repartitioned by cluster_id, cached and materialized with its
+    cluster sizes, and the next search packs and publishes it.
+
     Scale shape: the append is embarrassingly parallel (per-row argmin
     against broadcast centroids, plus codec encode if the index is
     compressed) and lands in the same cluster_id partitioning, so on a
@@ -489,34 +636,30 @@ def ivf_append(
     plans.  Centroids drift as the corpus grows; rebuild cadence is the
     caller's policy knob (same trade-off the reference's batch builds
     imply)."""
-    idx = FixedCentroidIVFIndexer(
+    add = FixedCentroidIVFIndexer(
         artifact.params["centroids"],
         metric=artifact.params["metric"],
         codec=artifact.params["codec"],
+    ).assign(new_df, id_col=id_col, vec_col=vec_col)
+    child = _delta_write(artifact, add, "appended")
+    if child is not None:
+        return child
+    child = _full_write(
+        artifact, artifact.tables["assignment"].unionByName(add), "appended"
     )
-    add = idx.build(new_df, id_col=id_col, vec_col=vec_col).tables["assignment"]
-    prev = artifact.tables["assignment"]
-    merged = prev.unionByName(add).repartition("cluster_id").cache()
-    merged.count()
     # Continuous-ingestion memory bound: once the merged table is
-    # materialized, the PREDECESSOR's cached copy is dead weight — a
+    # materialized, the predecessor's cached table is dead weight — a
     # foreachBatch ivf_append chain would otherwise pin one full cached
-    # assignment per micro-batch.  Only intermediate (appended)
-    # artifacts are evicted; the caller's original build keeps its
-    # cache (they may still be serving it).
-    if artifact.metadata.get("appended"):
+    # assignment per micro-batch.  Only intermediate (appended) caches
+    # are evicted; the caller's original build keeps its cache (they
+    # may still be serving it).
+    d = _delta_of(artifact)
+    if d.evict:
         try:
-            prev.unpersist()
+            d.base.unpersist()
         except Exception:
             pass
-    return IndexArtifact(
-        kind="ivf",
-        tables={"assignment": merged},
-        # drop runtime-only "_" params (e.g. the serving broadcast):
-        # they were packed from the PRE-append assignment
-        params={k: v for k, v in artifact.params.items() if not k.startswith("_")},
-        metadata={**artifact.metadata, "appended": True},
-    )
+    return child
 
 
 def ivf_delete(
@@ -527,26 +670,30 @@ def ivf_delete(
     """Remove vectors from the index by id — a broadcast anti-join on
     the assignment table (delete sets are tiny relative to the corpus).
 
+    When the artifact serves from a node-local replica, the ids are
+    collected in one job and the child's replica is derived from the
+    parent's: a hard-linked fork in which only the units holding a
+    deleted id are rewritten without them (``kernels.packed_shm_derive``),
+    so deleted rows are physically gone and the first search costs
+    what a steady search costs.  The fallbacks are ``ivf_append``'s:
+    otherwise the surviving table is cached and materialized with its
+    cluster sizes, and the next search re-packs it.
+
     Scale shape: with a persisted partitioned index this is the classic
     tombstone/compact trade — the anti-join applied at read time is the
     tombstone form; rewriting only the affected cluster_id partitions
     (never the whole index) is the compaction.  Centroids are untouched:
     deletion never degrades assignment of the survivors."""
-    dels = ids_df.select(F.col(id_col).alias("id")).distinct()
-    kept = (
-        artifact.tables["assignment"]
-        .join(F.broadcast(dels), "id", "left_anti")
-        .repartition("cluster_id")
-        .cache()
-    )
-    kept.count()
-    return IndexArtifact(
-        kind="ivf",
-        tables={"assignment": kept},
-        # drop runtime-only "_" params — a serving broadcast packed
-        # before the delete would still carry the deleted rows
-        params={k: v for k, v in artifact.params.items() if not k.startswith("_")},
-        metadata={**artifact.metadata, "deleted": True},
+    ids = ids_df.select(F.col(id_col).alias("id"))
+    child = _delta_write(artifact, ids, "deleted")
+    if child is not None:
+        return child
+    return _full_write(
+        artifact,
+        artifact.tables["assignment"].join(
+            F.broadcast(ids.distinct()), "id", "left_anti"
+        ),
+        "deleted",
     )
 
 

@@ -378,7 +378,10 @@ def artifact_serving_broadcast(
         return art.params["_serving_bc"]
     codec = art.params.get("codec")
     cents = art.params["centroids"]
-    n = art.tables[table].count()
+    sizes = art.params.get("_cluster_sizes") if table == "assignment" else None
+    # built and written artifacts carry their exact cluster sizes: the
+    # gate then needs no job; a loaded artifact counts its rows
+    n = sum(sizes.values()) if sizes is not None else art.tables[table].count()
     if codec is None:
         width = 4 * cents.shape[1]
     elif isinstance(codec, PQCodec):
