@@ -501,7 +501,6 @@ def main() -> int:
     # broadcast (threshold=0) and /dev/shm node-local blobs — the
     # partitioned two-phase scan a real cluster would run, exactness
     # unchanged (recall must stay 1.0)
-    saved_cp_bc = cp_art.params.pop("_serving_bc", None)
     cpn_res, t_cpn = timed_search(
         ClusterPrunedExactSearcher(
             nprobe=8, broadcast_threshold=0, node_local_cache=False
@@ -511,9 +510,6 @@ def main() -> int:
     )
     recall_cpn = recall_vs_exact(cpn_res)
     cpn_res.unpersist()
-    cp_art.params.pop("_serving_bc", None)  # drop the 0-threshold memo
-    if saved_cp_bc is not None:
-        cp_art.params["_serving_bc"] = saved_cp_bc
 
     # Amortized large-batch rows: the same artifacts serving a 16384-
     # query batch.  Spark's per-job floor dominates the 2048q numbers on
@@ -568,12 +564,7 @@ def main() -> int:
     # /dev/shm mmap publish — so the shuffle-replicated partitioned
     # plan (the one a 1000-executor cluster would run; the fast paths'
     # documented fallback) gets a recorded cost instead of only a
-    # functional test.  The fast-path memos are popped for the
-    # measurement and restored after (they are artifact-scoped).
-    saved_fp = {
-        k_: g_art.params.pop(k_, None)
-        for k_ in ("_shard_bc", "_shard_bc_key", "_shard_pids", "_shm_shards")
-    }
+    # functional test.
     res_nofp, t_nofp = timed_search(
         GraphANNSearcher(
             ef_search=24, broadcast_threshold=0, node_local_cache=False
@@ -584,10 +575,6 @@ def main() -> int:
     amortized["qps_graph_ef24_nofastpath_16384q"] = round(16_384 / t_nofp, 2)
     amortized["recall_graph_ef24_nofastpath_16384q"] = recall16(res_nofp)
     res_nofp.unpersist()
-    g_art.params.pop("_shard_bc", None)  # drop the 0-threshold None memo
-    for k_, v_ in saved_fp.items():
-        if v_ is not None:
-            g_art.params[k_] = v_
 
     # 65 536-query rows for the reference's fastest configs (ivf_sq8
     # 248 897 / ivf_flat 111 697 / ivf_pq 43 245 QPS in BASELINE.md):

@@ -74,16 +74,15 @@ def main() -> None:
 
     # rows_per_task sweep: build the broadcast-query plan directly
     from vectordb_retrieval_spark.operators import serving as sv
-    from vectordb_retrieval_spark.functions.kernels import (
-        query_broadcast_cached,
-    )
 
-    bc_index = sv.artifact_serving_broadcast(art, spark, 128 << 20)
-    bcq = query_broadcast_cached(big64, "qid", "vec")
+    _, bc_index = sv.packed_serving_plan(art, spark, 128 << 20)
+
+    def batch_fn(qids, qmat):
+        return sv.search_batch(bc_index.value, qids, qmat, 24, 20, "l2")
+
     for rpt in (1024, 2048, 3072, 4096):
-        p = sv._broadcast_query_plan(
-            spark, bcq, bc_index, 24, 20, "l2", False, None, None, 8192,
-            rows_per_task=rpt,
+        p = sv.query_driven_job(
+            big64, "qid", "vec", batch_fn, rows_per_task=rpt, gil_free=True
         ).select("qid", "id")
         materialize(p)
         t = tmin(lambda pp=p: materialize(pp))

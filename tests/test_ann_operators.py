@@ -1502,5 +1502,5 @@ def test_lsh_serving_bucket_verify_guard(spark, monkeypatch):
     ).build(base, id_col="id", vec_col="vec")
     monkeypatch.setenv("VR_LSH_VERIFY_BUCKETS", "1")
     s = LSHSearcher().attach(art)
-    bc = s._serving_broadcast(spark)
+    bc = s._serving_plan(spark)[1]
     assert bc is not None  # guard ran without raising

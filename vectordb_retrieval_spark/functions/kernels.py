@@ -262,12 +262,17 @@ def collect_or_chunk(
     """The shared searcher-side query-collect gate: returns
     ``(qids, qmat, None)`` when the frame fits the broadcast gate
     (memoized single-job collect), else ``(None, None, result)`` where
-    result is the union of ``recurse(chunk)`` over qid-hash chunks —
-    so no serving path ever materializes an unbounded query frame on
-    the driver."""
+    result is the empty (qid, id, dist, rank) frame for an empty batch,
+    or the union of ``recurse(chunk)`` over qid-hash chunks — so no
+    serving path ever materializes an unbounded query frame on the
+    driver."""
     bcq = query_broadcast_cached(query_df, qid_col, vec_col)
     if bcq is not None:
         qids, qmat = bcq.value
+        if len(qids) == 0:  # empty serving batch: empty result
+            return None, None, query_df.sparkSession.createDataFrame(
+                [], "qid long, id long, dist double, rank int"
+            )
         return qids, qmat, None
     from functools import reduce
 
@@ -429,20 +434,34 @@ def rowwise_distance(
 _DEC_DISABLED: set = set()
 
 
-def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
-    """The float64 scan form of one packed blob, replica-cached: the
-    partitioned kernel used to re-decode codes → f64 and recompute row
-    norms on EVERY search (at 150k×384-d that is ~0.5 GB of decode +
-    norm traffic per search; 3 GB at 1M).  The decode is deterministic,
-    so the first task to need a (cluster, sub, metric) writes its scan
-    form into the packed replica root and everyone mmaps one shared
-    copy.  Returns (mat64, aux):
+def _scan_form(raw, cdc, metric: str):
+    """The float64 scan form of one packed blob's rows, (mat64, aux):
 
     - l2:     mat64 = decoded f64 rows, aux = their squared norms —
               exactly the ``(b*b).sum(axis=1)`` pairwise_distances
               recomputes per call
     - cosine: mat64 = normalize_rows(decoded), aux = None
-    - ip:     mat64 = decoded f64 rows, aux = None
+    - ip:     mat64 = decoded f64 rows, aux = None"""
+    b64 = (
+        np.asarray(raw.astype(np.float32), dtype=np.float64)
+        if cdc is None
+        else np.asarray(cdc.decode(raw), dtype=np.float64)
+    )
+    if metric == "cosine":
+        return np.ascontiguousarray(normalize_rows(b64)), None
+    if metric == "l2":
+        return b64, (b64 * b64).sum(axis=1)
+    return b64, None
+
+
+def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
+    """``_scan_form`` of one packed blob, replica-cached: the
+    partitioned kernel used to re-decode codes → f64 and recompute row
+    norms on EVERY search (at 150k×384-d that is ~0.5 GB of decode +
+    norm traffic per search; 3 GB at 1M).  The decode is deterministic,
+    so the first task to need a (cluster, sub, metric) writes its scan
+    form into the packed replica root and everyone mmaps one shared
+    copy.
 
     Returns None when caching is disabled for this root (publish
     failed: tmpfs full) — caller decodes per call."""
@@ -453,20 +472,10 @@ def _decoded_shm(root: str, cid: int, sub: int, raw, cdc, metric: str):
         try:
             mm = replica.mmap_file(root, name)
         except FileNotFoundError:
-            b64 = (
-                np.asarray(raw.astype(np.float32), dtype=np.float64)
-                if cdc is None
-                else np.asarray(cdc.decode(raw), dtype=np.float64)
-            )
-            if metric == "cosine":
-                parts = [np.ascontiguousarray(normalize_rows(b64)).tobytes()]
-            elif metric == "l2":
-                parts = [
-                    np.ascontiguousarray(b64).tobytes(),
-                    (b64 * b64).sum(axis=1).tobytes(),
-                ]
-            else:
-                parts = [np.ascontiguousarray(b64).tobytes()]
+            mat64, aux = _scan_form(raw, cdc, metric)
+            parts = [np.ascontiguousarray(mat64).tobytes()]
+            if aux is not None:
+                parts.append(aux.tobytes())
             replica.write_blob(os.path.join(root, name), *parts)
             mm = replica.mmap_file(root, name)
     except OSError:
@@ -715,7 +724,7 @@ def _identity_preimages(spark, n: int) -> list[int]:
     return pre  # type: ignore[return-value]
 
 
-def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
+def packed_assignment_cached(art) -> DataFrame:
     """The packed form of an artifact's assignment table.  Build-time
     artifacts carry it as the first-class ``packed`` table (persisted
     parquet-partitioned by cluster_id, so probed searches prune blob
@@ -738,19 +747,18 @@ def packed_assignment_cached(art, table: str = "assignment") -> DataFrame:
     # (a LOADED dir-partitioned parquet does NOT qualify: a big cluster
     # spans several scan splits there); with the exact _cluster_sizes
     # beside it the pack is one action and no re-shuffle.
-    own = table == "assignment"
     packed = pack_assignment(
-        art.tables[table],
+        art.tables["assignment"],
         payload_col,
         codec,
-        cluster_sizes=art.params.get("_cluster_sizes") if own else None,
-        pre_partitioned=own and bool(art.params.get("_pack_pre_partitioned")),
+        cluster_sizes=art.params.get("_cluster_sizes"),
+        pre_partitioned=bool(art.params.get("_pack_pre_partitioned")),
     )
     art.params["_packed_df"] = packed
     return packed
 
 
-def packed_shm_cached(art, table: str = "assignment"):
+def packed_shm_publish(art):
     """Node-local replica of the packed assignment (the transport is
     ``functions/replica.py``, shared with graph ANN's shards): on a
     single-node master, each (cluster_id, sub) blob is published ONCE
@@ -762,27 +770,15 @@ def packed_shm_cached(art, table: str = "assignment"):
     load-balanced task placement (``_units_frame``).  The root is
     released with ``art``.
 
-    Returns (root, metadata DataFrame) or None when gated off
-    (multi-executor master, no tmpfs, publish failure).  Memoized on
-    the artifact (runtime-only ``_`` param); a swept root republishes.
-    ``ivf_append``/``ivf_delete`` derive a child's replica from this
-    one instead (``packed_shm_derive``)."""
-    memo = art.params.get("_packed_shm", "unset")
-    if memo is None:
-        return None
-    if memo != "unset" and replica.alive(memo[0]):
-        return memo
-    packed = packed_assignment_cached(art, table)
-    if not replica.enabled(packed.sparkSession):
-        art.params["_packed_shm"] = None
-        return None
-    try:
-        root, _ = replica.publish(
-            packed, "packed", ["cluster_id", "sub"], ["ids", "payload"]
-        )
-    except OSError:
-        art.params["_packed_shm"] = None
-        return None
+    Returns (root, metadata DataFrame); raises ``OSError`` when the
+    publish fails.  ``serving.serving_plan`` gates, memoizes and
+    republishes it as ``_packed_shm``; ``ivf_append``/``ivf_delete``
+    derive a child's replica from this one instead
+    (``packed_shm_derive``)."""
+    packed = packed_assignment_cached(art)
+    root, _ = replica.publish(
+        packed, "packed", ["cluster_id", "sub"], ["ids", "payload"]
+    )
     replica.own(art, root)
     units = {
         (int(r["cluster_id"]), int(r["sub"])): (
@@ -1017,7 +1013,10 @@ def cluster_scan_topk(
         # reverse import stays out of module scope
         import pyarrow as pa
 
-        from vectordb_retrieval_spark.operators.serving import topk_rows
+        from vectordb_retrieval_spark.operators.serving import (
+            pair_dists,
+            topk_cols,
+        )
 
         q_ids, q_mat, cdc, probes, allow, qb = bc.value
         acc_q: list[np.ndarray] = []
@@ -1046,7 +1045,7 @@ def cluster_scan_topk(
                     ).reshape(int(ns[i]), int(widths[i]))
                 else:
                     # node-local blob: two frombuffer views on a shared
-                    # read-only mmap (see packed_shm_cached) — zero
+                    # read-only mmap (see packed_shm_publish) — zero
                     # per-search blob bytes through Arrow
                     mm = replica.mmap_file(
                         shm_root, f"{int(cids[i])}-{int(subs[i])}.bin"
@@ -1083,35 +1082,35 @@ def cluster_scan_topk(
                         mat64[fmask],
                         aux[fmask] if aux is not None else None,
                     )
+                elif dec is None:
+                    if fmask is not None:
+                        raw = raw[fmask]
+                    if metric in ("l2", "cosine", "ip"):
+                        dec = _scan_form(raw, cdc, metric)
                 if dec is not None:
-                    # shm-cached scan form: inline the EXACT arithmetic
-                    # pairwise_distances runs, with the base-side decode
-                    # and norms read from the shared cache instead of
-                    # recomputed per search
+                    # scan form (shm-cached or decoded per call): inline
+                    # the EXACT arithmetic pairwise_distances runs, with
+                    # the base-side decode and norms precomputed
                     mat64, aux = dec
                     q = np.asarray(q_mat[qrows], dtype=np.float64)
+                    if metric == "cosine":
+                        # mat64 is already normalize_rows(decoded); the
+                        # query side re-normalizes exactly as
+                        # pairwise_distances does
+                        q = normalize_rows(q)
                     if metric == "l2":
-                        sq = (
+                        d = (
                             (q * q).sum(axis=1)[:, None]
                             + aux[None, :]
                             - 2.0 * (q @ mat64.T)
                         )
-                        np.maximum(sq, 0.0, out=sq)
-                        d = np.sqrt(sq)
+                        np.maximum(d, 0.0, out=d)
+                        np.sqrt(d, out=d)
                     elif metric == "cosine":
-                        # mat64 is already normalize_rows(decoded); the
-                        # query side re-normalizes exactly as
-                        # pairwise_distances does
-                        from vectordb_retrieval_spark.functions.distance import (
-                            normalize_rows,
-                        )
-
-                        d = 1.0 - normalize_rows(q) @ mat64.T
+                        d = 1.0 - q @ mat64.T
                     else:
                         d = -(q @ mat64.T)
                 else:
-                    if fmask is not None:
-                        raw = raw[fmask]
                     bvecs = (
                         raw.astype(np.float32)
                         if cdc is None
@@ -1124,9 +1123,18 @@ def cluster_scan_topk(
                 # tie-safe partial selection (argpartition + boundary
                 # re-rank) instead of a full per-row lexsort — identical
                 # lexicographic (dist, id) output, O(n) per row
-                od, oi = topk_rows(d, ids, kk)
+                cols = topk_cols(d, ids, kk)
+                if dec is None:  # custom metric
+                    od = np.take_along_axis(d, cols, axis=1)
+                else:
+                    # the kept rows' distances are pair_dists', as on
+                    # the broadcast plan
+                    od = pair_dists(
+                        q, mat64[cols], metric,
+                        None if aux is None else aux[cols],
+                    )
                 rq = np.repeat(qrows, kk)
-                fi = oi.ravel()
+                fi = ids[cols].ravel()
                 fd = od.ravel()
                 if qb is not None:
                     keepb = fd <= qb[rq]
@@ -1185,7 +1193,7 @@ def cluster_scan_topk(
         ).filter(F.col("cluster_id").isin(probed_ids))
     else:
         # shm mode: ``packed`` is the blob-free metadata table
-        # (packed_shm_cached) — the scan moves a few hundred ints; the
+        # (packed_shm_publish) — the scan moves a few hundred ints; the
         # kernel mmaps blob bytes node-locally
         src = packed.select(
             F.col("cluster_id").cast("long").alias("cluster_id"),

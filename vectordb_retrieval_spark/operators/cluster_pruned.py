@@ -35,9 +35,8 @@ from vectordb_retrieval_spark.functions.kernels import (
     cluster_scan_topk,
     merge_fragment_topk,
     packed_assignment_cached,
-    packed_shm_cached,
 )
-from vectordb_retrieval_spark.operators.ivf import IVFIndexer
+from vectordb_retrieval_spark.operators.ivf import IVFIndexer, IVFSearcher
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
 
@@ -125,15 +124,16 @@ class ClusterPrunedExactSearcher:
     on normalized vectors, which ``IVFIndexer(metric='cosine')`` already
     produces).
 
-    Physical plans: when the packed index fits under
-    ``broadcast_threshold``, BOTH phases run inside one broadcast-index
-    kernel (operators/serving.py dataflow) — each task computes its
-    queries' phase-1 scan, the T_q bound, the pruning decision, and the
-    phase-2 scan locally, so a search is a single shuffle-free job with
-    no driver round-trip.  Over the threshold, the partitioned-scan
-    path runs phase 1, collects the (one row per query, bounded) T_q
-    thresholds, and launches the pruned phase-2 scan — the 100 TB plan,
-    where the T_q collect is the only driver traffic."""
+    Physical plans, chosen per search as for IVFSearcher: when the
+    packed index fits under ``broadcast_threshold``, BOTH phases run
+    inside one broadcast-index kernel (operators/serving.py dataflow) —
+    each task computes its queries' phase-1 scan, the T_q bound, the
+    pruning decision, and the phase-2 scan locally, so a search is a
+    single shuffle-free job with no driver round-trip.  Over the
+    threshold, the partitioned-scan path runs phase 1, collects the
+    (one row per query, bounded) T_q thresholds, and launches the
+    pruned phase-2 scan — the 100 TB plan, where the T_q collect is the
+    only driver traffic."""
 
     def __init__(
         self,
@@ -162,6 +162,8 @@ class ClusterPrunedExactSearcher:
     def attach(self, artifact: IndexArtifact) -> "ClusterPrunedExactSearcher":
         self.artifact = artifact
         return self
+
+    _serving_plan = IVFSearcher._serving_plan
 
     def _search_broadcast(
         self, bc_index, query_df, k, qid_col, vec_col, accum
@@ -295,14 +297,8 @@ class ClusterPrunedExactSearcher:
             self.ndis_accum = spark.sparkContext.accumulator(0)
         accum = self.ndis_accum
 
-        from vectordb_retrieval_spark.operators.serving import (
-            artifact_serving_broadcast,
-        )
-
-        bc_index = artifact_serving_broadcast(
-            art, spark, self.broadcast_threshold
-        )
-        if bc_index is not None:
+        kind, handle = self._serving_plan(spark)
+        if kind == "broadcast":
             mk = (k, qid_col, vec_col, self.nprobe, id(art))
             memo = self._plans.get(query_df, mk, guard=art)
             if memo is not None:
@@ -311,7 +307,7 @@ class ClusterPrunedExactSearcher:
                 query_df,
                 mk,
                 self._search_broadcast(
-                    bc_index, query_df, k, qid_col, vec_col, accum
+                    handle, query_df, k, qid_col, vec_col, accum
                 ),
                 guard=art,
             )
@@ -332,18 +328,14 @@ class ClusterPrunedExactSearcher:
         if memo is not None:
             return memo
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, early = collect_or_chunk(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if early is not None:  # empty batch, or past-gate chunked union
+            return early
         if metric == "cosine":
             from vectordb_retrieval_spark.functions.distance import normalize_rows
 
@@ -354,7 +346,7 @@ class ClusterPrunedExactSearcher:
         order = np.lexsort((np.broadcast_to(np.arange(qc.shape[1]), qc.shape), qc), axis=1)
         probed = order[:, :nprobe]
 
-        shm = packed_shm_cached(art) if self.node_local_cache else None
+        shm = handle if kind == "shm" else None
         packed = packed_assignment_cached(art) if shm is None else shm[1]
         shm_root = None if shm is None else shm[0]
 

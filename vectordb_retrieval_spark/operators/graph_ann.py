@@ -1001,6 +1001,17 @@ def graph_delete(
     return _refresh_artifact(artifact, merged, "deleted")
 
 
+def _shards_shm_publish(art):
+    """Node-local replica of the shard blobs: (root, sorted pids), the
+    root released with ``art``; raises ``OSError`` when the publish
+    fails (``serving.serving_plan`` then ships the blobs)."""
+    root, names = replica.publish(
+        art.tables["graph"], "shards", ["pid"], ["blob"]
+    )
+    replica.own(art, root)
+    return root, sorted(int(n) for n in names)
+
+
 class GraphANNSearcher:
     """Broadcast queries; one batched beam search per partition graph;
     global top-k merge.
@@ -1015,6 +1026,14 @@ class GraphANNSearcher:
     ``ef_search`` ≥ shard size (where the GEMM short-circuit would give
     the same answer cheaper) — used by correctness queries to put the
     beam kernel itself, not its shortcut, under the hash-checked oracle.
+
+    Physical plans, chosen per search by ``serving.serving_plan`` from
+    the artifact's memoized shard bytes and THIS searcher's
+    ``broadcast_threshold``: broadcast shard blobs, a node-local replica
+    of them (``node_local_cache``, a single-node master), or
+    shuffle-replicated blob rows; all run the same per-shard kernel on
+    the same shard bytes and return identical (qid, id, dist, rank)
+    rows.
     """
 
     def __init__(
@@ -1045,6 +1064,34 @@ class GraphANNSearcher:
         self.artifact = artifact
         return self
 
+    def _serving_plan(self, spark):
+        """``serving.serving_plan`` over the shard blobs.  The broadcast
+        value is (key, {pid: blob}): the key names its blobs in the
+        workers' scan-state memo."""
+        from vectordb_retrieval_spark.operators.serving import serving_plan
+
+        graph = self.artifact.tables["graph"]
+
+        def estimate():
+            total = graph.agg(F.sum(F.length("blob"))).first()[0]
+            # no shards: serve through the partitioned plan
+            return float("inf") if total is None else total
+
+        def pack():
+            rows = graph.select("pid", "blob").collect()
+            shards = {int(r["pid"]): bytes(r["blob"]) for r in rows}
+            return (uuid.uuid4().hex, shards), sum(map(len, shards.values()))
+
+        return serving_plan(
+            self.artifact,
+            spark,
+            self.broadcast_threshold,
+            estimate=estimate,
+            pack=pack,
+            publish=_shards_shm_publish if self.node_local_cache else None,
+            replica_key="_shm_shards",
+        )
+
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
     ) -> DataFrame:
@@ -1066,18 +1113,14 @@ class GraphANNSearcher:
         if memo is not None:
             return memo
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, early = collect_or_chunk(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if early is not None:  # empty batch, or past-gate chunked union
+            return early
         if metric == "cosine":
             qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
 
@@ -1120,54 +1163,14 @@ class GraphANNSearcher:
         # Small index ⇒ broadcast the packed shards (same decision
         # Spark makes for broadcast joins): (shard, chunk) tasks come
         # from an exact 1-row-per-partition RDD — perfectly even tasks,
-        # no blob shuffle at all.  Large index ⇒ shuffle-replicate the
+        # no blob shuffle at all.  Over the threshold on a single-node
+        # master the shards are node-local replicas served through
+        # read-only mmaps — the same query-partitioned plan, zero
+        # per-search blob traffic.  Otherwise shuffle-replicate the
         # blob rows per chunk (shard_count × chunks rows — still the
-        # index, never the base data).
-        # shard-blob broadcast, built ONCE per artifact and reused by
-        # every subsequent search (leading "_": runtime-only, skipped
-        # by persistence).  A None entry remembers the over-threshold
-        # decision so the size probe doesn't re-run per search either.
-        # Probed BEFORE the chunk sizing below: on a first search the
-        # missing memo used to read as "partitioned path" and set
-        # chunks=1 even when the index was about to be broadcast.
-        if "_shard_bc" not in art.params:
-            total = art.tables["graph"].agg(
-                F.sum(F.length("blob")).alias("b")
-            ).collect()[0]["b"]
-            if total is not None and total <= self.broadcast_threshold:
-                rows = art.tables["graph"].select("pid", "blob").collect()
-                shards = {int(r["pid"]): bytes(r["blob"]) for r in rows}
-                art.params["_shard_bc"] = spark.sparkContext.broadcast(shards)
-                art.params["_shard_bc_key"] = uuid.uuid4().hex
-                art.params["_shard_pids"] = sorted(shards)
-            else:
-                art.params["_shard_bc"] = None
-        bc_shards = art.params["_shard_bc"]
-        # over-threshold on a single-node master: publish the shards as
-        # node-local replicas once and serve every search through
-        # read-only mmaps — same query-partitioned plan as the
-        # broadcast path, zero per-search blob traffic
-        shm_shards = (
-            art.params.get("_shm_shards") if self.node_local_cache else None
-        )
-        if shm_shards is not None and not replica.alive(shm_shards[0]):
-            shm_shards = None  # swept while idle: republish below
-        if (
-            bc_shards is None
-            and shm_shards is None
-            and self.node_local_cache
-            and replica.enabled(spark)
-        ):
-            try:
-                root, names = replica.publish(
-                    art.tables["graph"], "shards", ["pid"], ["blob"]
-                )
-                shm_shards = (root, sorted(int(n) for n in names))
-                replica.own(art, root)
-            except OSError:
-                shm_shards = None
-        if self.node_local_cache:
-            art.params["_shm_shards"] = shm_shards
+        # index, never the base data).  Decided BEFORE the chunk sizing
+        # below, which depends on it.
+        kind, handle = self._serving_plan(spark)
 
         # fan the query batch out across (shard × chunk) tasks: the
         # per-task kernel is CPU-bound NumPy, so shard count alone
@@ -1194,7 +1197,7 @@ class GraphANNSearcher:
         # narrow zero-shuffle scan of the cached graph table instead
         # (for a 150k x 384-d 32-shard index, chunks=2 was moving
         # ~560 MB of blobs per search to cut task count from 32 to 64)
-        if bc_shards is None and (
+        if kind != "broadcast" and (
             n_active if route is not None else n_parts
         ) >= par:
             chunks = 1
@@ -1253,7 +1256,7 @@ class GraphANNSearcher:
                 np.concatenate(out_d),
             )
 
-        if bc_shards is not None or shm_shards is not None:
+        if kind != "shipped":
             # Query-partitioned serving (the zero-shuffle inversion of
             # operators/serving.py): every shard blob is already on
             # every executor (broadcast) or node (shm publish), so each
@@ -1279,12 +1282,7 @@ class GraphANNSearcher:
                 1,
                 min(-(-n_q // 32), 2 * par if route is not None else par),
             )
-            shard_pids = (
-                art.params["_shard_pids"]
-                if bc_shards is not None
-                else shm_shards[1]
-            )
-            shm_root = None if bc_shards is not None else shm_shards[0]
+            shm_root = handle[0] if kind == "shm" else None
             # spark.range is a JVM-native scan with exactly one row per
             # task; a parallelize-backed DataFrame inserts an EXTRA
             # python stage (pickled-row scan → InternalRow conversion)
@@ -1295,17 +1293,15 @@ class GraphANNSearcher:
                 0, n_tasks, 1, numPartitions=n_tasks
             ).selectExpr("cast(id as int) qchunk")
 
-            bc_id = art.params.get("_shard_bc_key")
-
             def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 q_ids, q_mat, rt, _, _ = bc.value
                 if shm_root is None:
-                    shards = bc_shards.value
+                    bc_key, shards = handle.value
+                    shard_pids = sorted(shards)
                     get_blob = shards.__getitem__
-                    # no key => no memo (a pre-key artifact's broadcasts
-                    # would otherwise collide on the None key)
-                    key_base = ("bc", bc_id) if bc_id is not None else None
+                    key_base = ("bc", bc_key)
                 else:
+                    shard_pids = handle[1]
                     get_blob = lambda p: replica.mmap_file(  # noqa: E731
                         shm_root, f"{p}.bin"
                     )
@@ -1329,11 +1325,7 @@ class GraphANNSearcher:
                             lr, ci, cd = shard_cands(
                                 q_mat[sel],
                                 get_blob(pid),
-                                skey=(
-                                    None
-                                    if key_base is None
-                                    else key_base + (pid,)
-                                ),
+                                skey=key_base + (pid,),
                             )
                             acc_q.append(sel[lr])
                             acc_i.append(ci)

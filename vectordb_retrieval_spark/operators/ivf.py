@@ -51,8 +51,8 @@ from vectordb_retrieval_spark.functions.kernels import (
     merge_fragment_topk,
     pack_assignment,
     packed_assignment_cached,
-    packed_shm_cached,
     packed_shm_derive,
+    packed_shm_publish,
 )
 from vectordb_retrieval_spark.operators.topk import topk_per_query
 
@@ -700,8 +700,9 @@ def ivf_delete(
 class IVFSearcher:
     """nprobe-pruned candidate scan + exact (or decoded) rerank.
 
-    Two physical plans, selected by index size (the same decision rule
-    as Spark's broadcast-join threshold):
+    Physical plans, chosen per search by ``serving.serving_plan`` from
+    the artifact's memoized size and THIS searcher's threshold (the
+    same decision rule as Spark's broadcast-join threshold):
 
     - packed index ≤ ``broadcast_threshold`` bytes → broadcast-index
       serving (operators/serving.py): queries are scanned, the index is
@@ -710,10 +711,14 @@ class IVFSearcher:
       across searches.
     - larger → partitioned candidate scan (``cluster_scan_topk``):
       probe lists prune the cluster-partitioned assignment table and
-      fragment top-ks merge in a window — the 100 TB plan.
+      fragment top-ks merge in a window — the 100 TB plan — over a
+      node-local replica (``node_local_cache``) or shipped blobs.
 
-    Both plans produce identical results (same probe selection, float64
-    distances, (dist, id) tie-breaks)."""
+    All plans return identical (qid, id, rank, dist) rows: same probe
+    selection, (dist, id) tie-breaks, and the kept candidates' float64
+    distances from ``serving.pair_dists`` — bit for bit whenever the
+    codec decodes row by row (all but PCA and OPQ, whose decode is a
+    matrix product and agrees to float64 rounding)."""
 
     def __init__(
         self,
@@ -725,7 +730,7 @@ class IVFSearcher:
         self.broadcast_threshold = broadcast_threshold
         # over-threshold indexes on a single-node master: publish packed
         # blobs as node-local replicas once and scan a blob-free
-        # metadata table (kernels.packed_shm_cached).  False forces the
+        # metadata table (kernels.packed_shm_publish).  False forces the
         # blob-shipping partitioned plan — the multi-executor path,
         # kept testable.
         self.node_local_cache = node_local_cache
@@ -741,13 +746,16 @@ class IVFSearcher:
         self.artifact = artifact
         return self
 
-    def _serving_broadcast(self, spark):
+    def _serving_plan(self, spark):
         from vectordb_retrieval_spark.operators.serving import (
-            artifact_serving_broadcast,
+            packed_serving_plan,
         )
 
-        return artifact_serving_broadcast(
-            self.artifact, spark, self.broadcast_threshold
+        return packed_serving_plan(
+            self.artifact,
+            spark,
+            self.broadcast_threshold,
+            publish=packed_shm_publish if self.node_local_cache else None,
         )
 
     def probe_clusters(self, qids: np.ndarray, qmat: np.ndarray) -> pd.DataFrame:
@@ -823,8 +831,8 @@ class IVFSearcher:
             self.ndis_accum = spark.sparkContext.accumulator(0)
         accum = self.ndis_accum
 
-        bc_index = self._serving_broadcast(spark)
-        if bc_index is not None:
+        kind, handle = self._serving_plan(spark)
+        if kind == "broadcast":
             from vectordb_retrieval_spark.operators.serving import (
                 broadcast_probe_search,
             )
@@ -834,7 +842,7 @@ class IVFSearcher:
                 memo_key,
                 broadcast_probe_search(
                     query_df,
-                    bc_index,
+                    handle,
                     self.nprobe,
                     k,
                     metric,
@@ -853,7 +861,7 @@ class IVFSearcher:
             collect_or_chunk,
         )
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, early = collect_or_chunk(
             query_df,
             qid_col,
             vec_col,
@@ -861,12 +869,8 @@ class IVFSearcher:
                 c, k, qid_col, vec_col, allowed_df, allowed_id_col
             ),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if early is not None:  # empty batch, or past-gate chunked union
+            return early
         if metric == "cosine":
             qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
         probe = self.probe_clusters(qids, qmat)
@@ -884,9 +888,7 @@ class IVFSearcher:
         scan_tasks = (
             max(8, len(qids) // 64) if len(qids) <= 4096 else None
         )
-        shm = (
-            packed_shm_cached(art) if self.node_local_cache else None
-        )
+        shm = handle if kind == "shm" else None
         scored = cluster_scan_topk(
             packed_assignment_cached(art) if shm is None else shm[1],
             qids,

@@ -107,14 +107,16 @@ class LSHIndexer:
         buckets = base_df.select(id_col, vec_col).mapInPandas(
             kernel, schema="table_id int, bucket string, id long"
         ).cache()
-        buckets.count()
+        # one bucket row per (table, vector): the row count the serving
+        # size estimate reads, so a first search runs no count job
+        n_rows = buckets.count() // n_tables
         vectors = base_df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
         )
         return IndexArtifact(
             kind="lsh",
             tables={"buckets": buckets, "vectors": vectors},
-            params={"indexer": self},
+            params={"indexer": self, "_rows": n_rows},
             metadata={
                 "metric": self.metric,
                 "num_tables": self.num_tables,
@@ -155,7 +157,9 @@ class LSHSearcher:
     """Vote-and-cap candidate selection with exact rerank.
 
     Small-index fast path (same inversion as ``operators/serving.py``):
-    when buckets + float32 vectors pack under ``broadcast_threshold``,
+    when buckets + float32 vectors pack under THIS searcher's
+    ``broadcast_threshold`` (compared per search by
+    ``serving.serving_plan``),
     the whole hash → probe → vote → cap → rerank → top-k pipeline (plus
     the zero-candidate exact fallback) runs inside ONE mapInPandas job
     over the query table — no bucket join, no vote shuffle, no window,
@@ -201,25 +205,38 @@ class LSHSearcher:
         self.artifact = artifact
         return self
 
-    def _serving_broadcast(self, spark):
-        """Memoized PackedLSH broadcast, or None over the threshold.
-        Size is estimated from row counts before any collect (float32
-        vectors + int64 ids; rerank upcasts are per-batch transients,
-        so unlike the IVF family there is no persistent decode cache to
-        account for)."""
+    def _serving_plan(self, spark):
+        """``serving.serving_plan`` over a PackedLSH.  Its size is exact
+        before any collect: float32 vectors + int64 ids + one int64 id
+        per bucket table per row (rerank upcasts are per-batch
+        transients, so unlike the IVF family there is no persistent
+        decode cache to account for)."""
+        from vectordb_retrieval_spark.operators.serving import serving_plan
+
         art = self.artifact
-        if "_serving_bc" in art.params:
-            return art.params["_serving_bc"]
         indexer: LSHIndexer = art.params["indexer"]
-        # ONE action total (r13): collect the vectors row-capped (an
-        # over-threshold index never materializes on the driver — the
-        # query_broadcast_cached limit-gate convention) and recompute
-        # the bucket table DRIVER-side with the same seeded float32
-        # kernel the build ran (``bucket_of`` is deterministic, so the
-        # dict is identical to collecting art.tables["buckets"]).  The
-        # previous shape paid three driver round-trips per artifact:
-        # buckets.count() for the estimate, vectors.toPandas(), and
-        # buckets.toPandas().
+
+        def estimate():
+            n = art.params.get("_rows")
+            if n is None:  # a loaded artifact counts its rows
+                n = art.tables["vectors"].count()
+            # an empty index serves through the pipeline
+            per_row = 4 * indexer.dimension + 8 + indexer.num_tables * 8
+            return n * per_row if n else float("inf")
+
+        return serving_plan(
+            art, spark, self.broadcast_threshold, estimate=estimate, pack=self._pack
+        )
+
+    def _pack(self):
+        """The attached index as a PackedLSH, and its bytes."""
+        art = self.artifact
+        indexer: LSHIndexer = art.params["indexer"]
+        # ONE action total (r13): collect the vectors (the estimate
+        # gated their size first) and recompute the bucket table
+        # DRIVER-side with the same seeded float32 kernel the build ran
+        # (``bucket_of`` is deterministic, so the dict is identical to
+        # collecting art.tables["buckets"]).
         #
         # SCALE ASSUMPTION (r13 judge): "deterministic" here means the
         # driver's float32 GEMM reproduces the executors' bit-for-bit.
@@ -229,12 +246,7 @@ class LSHSearcher:
         # on a hyperplane.  Guard: set VR_LSH_VERIFY_BUCKETS=1 to
         # cross-check the recomputed dict against the build's buckets
         # table on first attach (one extra collect, debug only).
-        per_row = 4 * indexer.dimension + 8 + indexer.num_tables * 8
-        cap = max(1, self.broadcast_threshold // per_row)
-        vp = art.tables["vectors"].limit(cap + 1).toPandas()
-        if len(vp) == 0 or len(vp) > cap:
-            art.params["_serving_bc"] = None
-            return None
+        vp = art.tables["vectors"].toPandas()
         ids = vp["id"].to_numpy(dtype=np.int64)
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
@@ -279,12 +291,7 @@ class LSHSearcher:
                     "(broadcast_threshold=0) or rebuild on matching BLAS"
                 )
         packed = PackedLSH(buckets, ids, vecs, indexer)
-        if packed.nbytes() > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        bc = spark.sparkContext.broadcast(packed)
-        art.params["_serving_bc"] = bc
-        return bc
+        return packed, packed.nbytes()
 
     def _broadcast_search(
         self, query_df: DataFrame, bc_index, k: int, qid_col: str, vec_col: str
@@ -456,8 +463,8 @@ class LSHSearcher:
         if memo is not None:
             return memo
 
-        bc_index = self._serving_broadcast(spark)
-        if bc_index is not None:
+        kind, bc_index = self._serving_plan(spark)
+        if kind == "broadcast":
             return self._plans.put(
                 query_df,
                 mk,
@@ -469,18 +476,14 @@ class LSHSearcher:
             collect_or_chunk,
         )
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, early = collect_or_chunk(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if early is not None:  # empty batch, or past-gate chunked union
+            return early
         if self.n_probes > 1:
             from vectordb_retrieval_spark.functions.hashing import (
                 e2lsh_multiprobe_buckets,

@@ -67,18 +67,26 @@ class PQIndexer:
         # cache + eager count: the m-byte code table IS the index (tiny
         # vs the vectors); encode runs once at build, searches scan codes
         codes = self.codec.encode_df(base, "vec").cache()
-        codes.count()
+        n = codes.count()
         return IndexArtifact(
             kind="pq",
             tables={"codes": codes},
-            params={"codec": self.codec, "metric": self.metric},
+            params={
+                "codec": self.codec,
+                "metric": self.metric,
+                # the code table packs as one cluster 0; the serving
+                # size estimate reads this, so a first search counts
+                # nothing
+                "_cluster_sizes": {0: n},
+            },
             metadata={"m": self.codec.m, "ksub": self.codec.ksub, "metric": self.metric},
         )
 
 
 class PQADCSearcher:
     """Exhaustive decoded-ADC scan; like IVFSearcher, a code table that
-    packs under ``broadcast_threshold`` is served via the broadcast-
+    packs under THIS searcher's ``broadcast_threshold`` (compared per
+    search by ``serving.serving_plan``) is served via the broadcast-
     index path (operators/serving.py): one shuffle-free job over the
     query table, decoded codes memoized per worker across searches."""
 
@@ -95,38 +103,12 @@ class PQADCSearcher:
         self.artifact = artifact
         return self
 
-    def _serving_broadcast(self, spark):
+    def _serving_plan(self, spark):
         from vectordb_retrieval_spark.operators.serving import (
-            own_shared_scan,
-            pack_clusters,
+            packed_serving_plan,
         )
 
-        art = self.artifact
-        if "_serving_bc" in art.params:
-            return art.params["_serving_bc"]
-        codec: PQCodec = art.params["codec"]
-        n = art.tables["codes"].count()
-        width = codec.m * (1 if codec.ksub <= 256 else 2)
-        # packed codes + ids PLUS the per-worker float64 decode cache
-        # (8 bytes x dim per row) — same gate as
-        # serving.artifact_serving_broadcast
-        decoded = 8 * codec.codebooks.shape[0] * codec.codebooks.shape[2]
-        if n * (width + decoded + 8) > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        packed = pack_clusters(
-            art.tables["codes"].withColumn("cluster_id", F.lit(0)),
-            "codes",
-            None,
-            codec,
-        )
-        if packed.nbytes() > self.broadcast_threshold:
-            art.params["_serving_bc"] = None
-            return None
-        own_shared_scan(art, packed)
-        bc = spark.sparkContext.broadcast(packed)
-        art.params["_serving_bc"] = bc
-        return bc
+        return packed_serving_plan(self.artifact, spark, self.broadcast_threshold)
 
     def search(
         self, query_df: DataFrame, k: int, qid_col: str = "qid", vec_col: str = "vec"
@@ -139,8 +121,8 @@ class PQADCSearcher:
         if memo is not None:
             return memo
 
-        bc_index = self._serving_broadcast(spark)
-        if bc_index is not None:
+        kind, bc_index = self._serving_plan(spark)
+        if kind == "broadcast":
             from vectordb_retrieval_spark.operators.serving import (
                 broadcast_probe_search,
             )
@@ -169,18 +151,14 @@ class PQADCSearcher:
             topk_cols_tiebreak,
         )
 
-        qids, qmat, chunked = collect_or_chunk(
+        qids, qmat, early = collect_or_chunk(
             query_df,
             qid_col,
             vec_col,
             lambda c: self.search(c, k, qid_col, vec_col),
         )
-        if chunked is not None:  # past-gate frame: chunked union
-            return chunked
-        if len(qids) == 0:  # empty serving batch: empty result
-            return spark.createDataFrame(
-                [], "qid long, id long, dist double, rank int"
-            )
+        if early is not None:  # empty batch, or past-gate chunked union
+            return early
         q64 = qmat.astype(np.float64)
         if codec.normalize:
             from vectordb_retrieval_spark.functions.distance import normalize_rows

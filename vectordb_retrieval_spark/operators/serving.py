@@ -31,6 +31,7 @@ reference's in-memory throughput.
 from __future__ import annotations
 
 import os
+import threading
 import uuid
 from typing import Iterator
 
@@ -268,22 +269,24 @@ class PackedClusters:
 
         allowed = np.asarray(allowed, dtype=np.int64)
         key = (len(allowed), hashlib.md5(allowed.tobytes()).hexdigest())
-        got = self._filt.get(key)
-        if got is None:
-            ids2, pays2 = [], []
-            for i in range(len(self.cids)):
-                m = np.isin(self.ids[i], allowed)
-                ids2.append(self.ids[i][m])
-                pays2.append(self.payloads[i][m])
-            got = PackedClusters(
-                self.cids, ids2, pays2, self.codec, self.centroids
-            )
-            # bounded memo: a workload cycling through many predicates
-            # must not pin one filtered copy (payloads + scan caches)
-            # per filter — evict the oldest beyond 4 entries
-            while len(self._filt) >= 4:
-                self._filt.pop(next(iter(self._filt)))
-            self._filt[key] = got
+        # a query_driven_job task may run two slices on two threads
+        with _FILT_LOCK:
+            got = self._filt.get(key)
+            if got is None:
+                ids2, pays2 = [], []
+                for i in range(len(self.cids)):
+                    m = np.isin(self.ids[i], allowed)
+                    ids2.append(self.ids[i][m])
+                    pays2.append(self.payloads[i][m])
+                got = PackedClusters(
+                    self.cids, ids2, pays2, self.codec, self.centroids
+                )
+                # bounded memo: a workload cycling through many
+                # predicates must not pin one filtered copy (payloads +
+                # scan caches) per filter — evict the oldest beyond 4
+                while len(self._filt) >= 4:
+                    self._filt.pop(next(iter(self._filt)))
+                self._filt[key] = got
         return got
 
 
@@ -356,98 +359,143 @@ def pack_clusters_from_packed(
     )
 
 
-def artifact_serving_broadcast(
+def serving_plan(
     art,
     spark,
     threshold: int,
-    table: str = "assignment",
+    *,
+    estimate,
+    pack,
+    publish=None,
+    replica_key: str = "_packed_shm",
 ):
-    """Memoized packed-index broadcast for an IVF-family artifact
-    (flat, SQ8 or PQ payload).  Returns None when the packed index
-    would exceed ``threshold`` — size is ESTIMATED from row count ×
-    payload width before any collect, so the driver never materializes
-    an over-threshold index.  Underscore params are runtime-only: never
-    persisted, never inherited by append/delete derivatives."""
+    """The one serving-plan selector of every ANN searcher family:
+    ``("broadcast", Broadcast)`` when the index's bytes fit the calling
+    searcher's ``threshold``; else ``("shm", replica)`` when ``publish``
+    is given and a node-local replica is live or publishes; else
+    ``("shipped", None)``: the index rows travel through Spark.
+
+    The artifact memoizes facts, never the decision — as Spark's
+    broadcast join caches a relation's size, not its plan — so each
+    searcher gets its own plan: ``_serving_bytes`` (``estimate()``,
+    taken before any collect, raised to the bytes ``pack()`` reports
+    beside its value), ``_serving_bc`` (that value's broadcast) and
+    ``replica_key`` (what ``publish(art)`` returned: a ``(root, ...)``
+    tuple, republished when swept, or None after an ``OSError``).  All
+    are runtime-only: never persisted, never inherited by a write."""
+    est = art.params.get("_serving_bytes")
+    if est is None:
+        est = art.params["_serving_bytes"] = estimate()
+    bc = art.params.get("_serving_bc")
+    if bc is None and est <= threshold:
+        value, nbytes = pack()
+        est = art.params["_serving_bytes"] = max(est, nbytes)
+        if est <= threshold:
+            bc = art.params["_serving_bc"] = spark.sparkContext.broadcast(value)
+    if bc is not None and est <= threshold:
+        return "broadcast", bc
+    if publish is None or not replica.enabled(spark):
+        return "shipped", None
+    shm = art.params.get(replica_key)
+    if replica_key not in art.params or (
+        shm is not None and not replica.alive(shm[0])
+    ):
+        try:
+            shm = publish(art)
+        except OSError:
+            shm = None
+        art.params[replica_key] = shm
+    return ("shipped", None) if shm is None else ("shm", shm)
+
+
+def packed_serving_plan(art, spark, threshold: int, publish=None):
+    """``serving_plan`` for a packed-cluster index: the IVF family's
+    assignment table (flat, SQ8, fp16, PCA or PQ payload), or standalone
+    PQ's code table (no centroids: one cluster 0)."""
     from vectordb_retrieval_spark.operators.quant import (
         PCACodec,
         PQCodec,
         SQfp16Codec,
     )
 
-    if "_serving_bc" in art.params:
-        return art.params["_serving_bc"]
     codec = art.params.get("codec")
-    cents = art.params["centroids"]
-    sizes = art.params.get("_cluster_sizes") if table == "assignment" else None
-    # built and written artifacts carry their exact cluster sizes: the
-    # gate then needs no job; a loaded artifact counts its rows
-    n = sum(sizes.values()) if sizes is not None else art.tables[table].count()
+    cents = art.params.get("centroids")
+    if cents is None:
+        table, dim = "codes", codec.codebooks.shape[0] * codec.codebooks.shape[2]
+    else:
+        table, dim = "assignment", cents.shape[1]
     if codec is None:
-        width = 4 * cents.shape[1]
+        width = 4 * dim
     elif isinstance(codec, PQCodec):
         width = codec.m * (1 if codec.ksub <= 256 else 2)
     elif isinstance(codec, PCACodec):
         width = 4 * codec.dim_out  # float32 reduced coordinates
     elif isinstance(codec, SQfp16Codec):
-        width = 2 * cents.shape[1]  # fp16 bit patterns
+        width = 2 * dim  # fp16 bit patterns
     else:
-        width = cents.shape[1]  # SQ8: one byte per dim packed
-    # gate on what a worker actually holds: packed payload + ids PLUS
-    # the packed scan state (float64 matrix + float32 downcast + norms,
-    # ~12 bytes × dim per row).  Gating on packed bytes alone let a
-    # 57 MB SQ8 index through whose decode is 460 MB — every worker
-    # then pays a one-shot full-index decode and the "fast path" ran
-    # 30x slower than the partitioned scan.
-    decoded = 12 * cents.shape[1] + 12
-    if n * (width + decoded + 8) > threshold:
-        art.params["_serving_bc"] = None
-        return None
-    if (
-        art.tables.get("packed") is not None
-        or art.params.get("_packed_df") is not None
-    ):
-        from vectordb_retrieval_spark.functions.kernels import (
-            packed_assignment_cached,
-        )
+        width = dim  # SQ8: one byte per dim packed
 
-        packed = pack_clusters_from_packed(
-            packed_assignment_cached(art, table), cents, codec
-        )
-    else:
-        # fixed-centroid / derived artifacts carry no prebuilt blob
-        # table: collect the assignment rows directly — ONE action —
-        # instead of first materializing a packed blob DataFrame the
-        # broadcast immediately collects anyway (the lazy
-        # pack_assignment route costs a sizes aggregate + the pack
-        # shuffle + a cache count + the blob collect: four driver
-        # round-trips; r13 measured them as most of the fixed-centroid
-        # search wall at catalogue scale).  Bundle contents are
-        # identical (same dtypes, ascending cluster ids; within-cluster
-        # row order is irrelevant to results — distances are per-row
-        # and selection ties break on (dist, id)).  The over-threshold
-        # partitioned scan still packs lazily via
-        # packed_assignment_cached.
-        packed = pack_clusters(
-            art.tables[table],
-            "vec" if codec is None else "codes",
-            cents,
-            codec,
-        )
-    if packed.nbytes() > threshold:
-        art.params["_serving_bc"] = None
-        return None
-    own_shared_scan(art, packed)
-    bc = spark.sparkContext.broadcast(packed)
-    art.params["_serving_bc"] = bc
-    return bc
+    def estimate() -> int:
+        # built and written artifacts carry their exact cluster sizes:
+        # the estimate then needs no job; a loaded artifact counts rows
+        sizes = art.params.get("_cluster_sizes")
+        n = sum(sizes.values()) if sizes is not None else art.tables[table].count()
+        # what a worker actually holds: packed payload + ids PLUS the
+        # packed scan state (float64 matrix + float32 downcast + norms,
+        # ~12 bytes × dim per row).  Gating on packed bytes alone let a
+        # 57 MB SQ8 index through whose decode is 460 MB — every worker
+        # then paid a one-shot full-index decode and the "fast path"
+        # ran 30x slower than the partitioned scan.
+        return n * (width + 12 * dim + 12 + 8)
+
+    def pack():
+        if (
+            art.tables.get("packed") is not None
+            or art.params.get("_packed_df") is not None
+        ):
+            from vectordb_retrieval_spark.functions.kernels import (
+                packed_assignment_cached,
+            )
+
+            packed = pack_clusters_from_packed(
+                packed_assignment_cached(art), cents, codec
+            )
+        else:
+            # fixed-centroid / derived artifacts and PQ carry no prebuilt
+            # blob table: collect the rows directly — ONE action —
+            # instead of first materializing a packed blob DataFrame the
+            # broadcast immediately collects anyway (the lazy
+            # pack_assignment route costs a sizes aggregate + the pack
+            # shuffle + a cache count + the blob collect: four driver
+            # round-trips; r13 measured them as most of the
+            # fixed-centroid search wall at catalogue scale).  Bundle
+            # contents are identical (same dtypes, ascending cluster
+            # ids; within-cluster row order is irrelevant to results —
+            # distances are per-row and selection ties break on
+            # (dist, id)).
+            rows = art.tables[table]
+            if cents is None:
+                rows = rows.withColumn("cluster_id", F.lit(0))
+            packed = pack_clusters(
+                rows, "vec" if codec is None else "codes", cents, codec
+            )
+        own_shared_scan(art, packed)
+        return packed, packed.nbytes()
+
+    return serving_plan(
+        art, spark, threshold, estimate=estimate, pack=pack, publish=publish
+    )
 
 
-# slice-grouping threshold for _broadcast_query_plan: past this many
+# slice-grouping threshold for query_driven_job: past this many
 # query slices, two slices share one python task on a 2-thread pool
 # (GIL-free NumPy kernels overlap; dispatch tail halves).  Module-level
 # so the policy is A/B-able per kernel — r13 re-measured the r12 pq/lsh
 # serving rows under both settings (see OPTIMIZATION_r13.md).
 _SLICE_GROUP_THRESHOLD = 16
+
+# guards PackedClusters.filtered's memo
+_FILT_LOCK = threading.Lock()
 
 # padding sentinel for ragged candidate blocks: sorts after every real
 # id at equal (infinite) distance, filtered from the emitted rows
@@ -459,14 +507,23 @@ _PAD_POS = np.int32(np.iinfo(np.int32).max)
 def topk_block(
     D: np.ndarray, I: np.ndarray, kk: int
 ) -> tuple[np.ndarray, np.ndarray]:
+    """(distances, ids) of ``topk_block_cols``."""
+    cols = topk_block_cols(D, I, kk)
+    return (
+        np.take_along_axis(D, cols, axis=1),
+        np.take_along_axis(I, cols, axis=1),
+    )
+
+
+def topk_block_cols(D: np.ndarray, I: np.ndarray, kk: int) -> np.ndarray:
     """Row-wise smallest-kk over a padded (n_q, c) candidate block with
     PER-ROW id arrays, ties by ascending id — the ragged-width sibling
-    of ``topk_rows``.  Padding entries are (inf, _PAD_ID): they sort
-    after every real candidate, so rows with fewer than kk real
-    candidates surface them at the tail for the caller to filter.
-    Boundary ties (kth == (k+1)th distance) re-rank the affected rows
-    with a full (dist, id) lexsort, so the kept set is always the
-    lexicographic top-kk.
+    of ``topk_cols``.  Returns the kept columns, best first.  Padding
+    entries are (inf, _PAD_ID): they sort after every real candidate,
+    so rows with fewer than kk real candidates surface them at the tail
+    for the caller to filter.  Boundary ties (kth == (k+1)th distance)
+    re-rank the affected rows with a full (dist, id) lexsort, so the
+    kept set is always the lexicographic top-kk.
 
     Measured dead end (do not re-attempt without new evidence): an
     exact subsample-bound prune before the selection (kk-th smallest
@@ -477,17 +534,17 @@ def topk_block(
     the introselect they avoid."""
     n = D.shape[1]
     if n <= kk:
-        order = np.lexsort((I, D), axis=1)
-        return np.take_along_axis(D, order, axis=1), np.take_along_axis(
-            I, order, axis=1
-        )
+        return np.lexsort((I, D), axis=1)
     part = np.argpartition(D, kk - 1, axis=1)[:, :kk]
-    pdist = np.take_along_axis(D, part, axis=1)
-    pids = np.take_along_axis(I, part, axis=1)
-    order = np.lexsort((pids, pdist), axis=1)
-    out_d = np.take_along_axis(pdist, order, axis=1)
-    out_i = np.take_along_axis(pids, order, axis=1)
-    thresh = out_d[:, -1]
+    order = np.lexsort(
+        (
+            np.take_along_axis(I, part, axis=1),
+            np.take_along_axis(D, part, axis=1),
+        ),
+        axis=1,
+    )
+    cols = np.take_along_axis(part, order, axis=1)
+    thresh = np.take_along_axis(D, cols[:, -1:], axis=1)[:, 0]
     # rows whose kk-th kept value is inf hold FEWER than kk finite
     # candidates: every finite candidate is already kept (and sorted by
     # the lexsort above), so the pad-induced inf ties can't change the
@@ -496,36 +553,63 @@ def topk_block(
         np.isfinite(thresh) & ((D <= thresh[:, None]).sum(axis=1) > kk)
     )[0]
     for r in ambiguous:
-        full = np.lexsort((I[r], D[r]))[:kk]
-        out_d[r] = D[r][full]
-        out_i[r] = I[r][full]
-    return out_d, out_i
+        cols[r] = np.lexsort((I[r], D[r]))[:kk]
+    return cols
 
 
 def topk_rows(d: np.ndarray, ids: np.ndarray, kk: int) -> tuple[np.ndarray, np.ndarray]:
+    """(distances, ids) of ``topk_cols``."""
+    cols = topk_cols(d, ids, kk)
+    return np.take_along_axis(d, cols, axis=1), ids[cols]
+
+
+def topk_cols(d: np.ndarray, ids: np.ndarray, kk: int) -> np.ndarray:
     """Per-row smallest-kk selection over a (n_q, n_b) distance block,
-    ties by ascending id — exact: boundary ties (kth == (k+1)th value)
-    are re-ranked with a full (dist, id) lexsort for the affected rows,
-    so the kept SET always equals the lexicographic top-k.  The
-    vectorized argpartition path covers the (overwhelmingly common)
-    tie-free case."""
+    ties by ascending id; returns the kept columns, best first.  Exact:
+    boundary ties (kth == (k+1)th value) are re-ranked with a full
+    (dist, id) lexsort for the affected rows, so the kept SET always
+    equals the lexicographic top-k.  The vectorized argpartition path
+    covers the (overwhelmingly common) tie-free case."""
     n = d.shape[1]
     if n <= kk:
-        order = np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)
-        return np.take_along_axis(d, order, axis=1), ids[order]
+        return np.lexsort((np.broadcast_to(ids, d.shape), d), axis=1)
     part = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-    pdist = np.take_along_axis(d, part, axis=1)
-    pids = ids[part]
-    order = np.lexsort((pids, pdist), axis=1)
-    out_d = np.take_along_axis(pdist, order, axis=1)
-    out_i = np.take_along_axis(pids, order, axis=1)
-    thresh = out_d[:, -1]
+    order = np.lexsort((ids[part], np.take_along_axis(d, part, axis=1)), axis=1)
+    cols = np.take_along_axis(part, order, axis=1)
+    thresh = np.take_along_axis(d, cols[:, -1:], axis=1)[:, 0]
     ambiguous = np.nonzero((d <= thresh[:, None]).sum(axis=1) > kk)[0]
     for r in ambiguous:
-        full = np.lexsort((ids, d[r]))[:kk]
-        out_d[r] = d[r][full]
-        out_i[r] = ids[full]
-    return out_d, out_i
+        cols[r] = np.lexsort((ids, d[r]))[:kk]
+    return cols
+
+
+def pair_dot(q: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, m) float64 dot products of each query row ``q[i]`` with its
+    candidate rows ``B[i, j]``, each one row-wise sum.  A GEMM element
+    depends on the block it was computed in (the BLAS picks other
+    kernels and summation orders for other shapes), so two plans that
+    group queries and rows differently disagree in the last bit; a
+    row-wise sum depends on its two rows only."""
+    return (q[:, None, :] * B).sum(axis=2)
+
+
+def pair_dists(
+    q: np.ndarray, B: np.ndarray, metric: str, bsq: np.ndarray | None = None
+) -> np.ndarray:
+    """``pairwise_distances``' float64 arithmetic for gathered candidates
+    (l2, cosine, ip), with dots from ``pair_dot``: ``q`` are query rows,
+    ``B[i, j]`` the candidates of query ``i`` in scan form (both
+    normalized for cosine), ``bsq`` their squared norms (l2).  Every
+    IVF plan (broadcast, node-local, shipped) emits the distances of
+    its selected candidates through this, so their distances agree bit
+    for bit whenever decoding is row-wise (raw vectors, SQ8, fp16, PQ;
+    PCA and OPQ decode through a matrix product)."""
+    dot = pair_dot(q, B)
+    if metric == "l2":
+        d = (q * q).sum(axis=1)[:, None] + bsq - 2.0 * dot
+        np.maximum(d, 0.0, out=d)
+        return np.sqrt(d, out=d)
+    return 1.0 - dot if metric == "cosine" else -dot
 
 
 def _probe_plan(
@@ -906,12 +990,12 @@ def _search_batch_fast(
     mm = m
 
     # --- float64 refinement: recompute the selected candidates'
-    # distances in float64 and re-rank by (dist, id) — the emitted
-    # values and ordering are the exact path's ---
+    # distances in float64 (pair_dists' arithmetic) and re-rank by
+    # (dist, id) — the emitted values and ordering are the exact
+    # path's ---
     mask = sp != _PAD_POS
     cp = np.where(mask, sp, 0).astype(np.int64)
-    Bm = F64[cp]  # (n_q, mm, dim) gather
-    dot = np.matmul(q64[:, None, :], Bm.transpose(0, 2, 1))[:, 0, :]
+    dot = pair_dot(q64, F64[cp])  # (n_q, mm, dim) gather
     if metric == "l2":
         s64 = qsq64[:, None] + sq64[cp] - 2.0 * dot  # unclamped d²
         dist = np.sqrt(np.maximum(s64, 0.0))
@@ -1041,12 +1125,16 @@ def _search_batch_exact(
         for s in range(0, sz, block_rows):
             entries.append((bi, s, min(sz, s + block_rows), qrows))
     cap = max(block_rows, 4 * k)
+    # candidate rows' positions in packed_scan's cluster-major order
+    offs = np.cumsum([0] + [len(i) for i in idx.ids], dtype=np.int64)
     seg_d: list[np.ndarray] = []
     seg_i: list[np.ndarray] = []
+    seg_p: list[np.ndarray] = []
 
     def flush(pend, width: int) -> None:
         D = np.full((n_q, width), np.inf)
         I = np.full((n_q, width), _PAD_ID)
+        P = np.zeros((n_q, width), dtype=np.int64)
         fill = np.zeros(n_q, dtype=np.int64)
         for bi, s, e, qrows in pend:
             qsub = q64 if qrows is None else q64[qrows]
@@ -1077,10 +1165,11 @@ def _search_batch_exact(
             cols = fill[rows, None] + np.arange(e - s)
             D[rows[:, None], cols] = d
             I[rows[:, None], cols] = idx.ids[bi][s:e]
+            P[rows[:, None], cols] = np.arange(offs[bi] + s, offs[bi] + e)
             fill[rows] += e - s
-        od, oi = topk_block(D, I, min(k, width))
-        seg_d.append(od)
-        seg_i.append(oi)
+        sel = topk_block_cols(D, I, min(k, width))
+        for seg, a in ((seg_d, D), (seg_i, I), (seg_p, P)):
+            seg.append(np.take_along_axis(a, sel, axis=1))
 
     pend: list[tuple] = []
     w = np.zeros(n_q, dtype=np.int64)
@@ -1101,12 +1190,20 @@ def _search_batch_exact(
         flush(pend, int(w.max()))
     if not seg_d:
         return None
-    if len(seg_d) == 1:
-        fd, fi = seg_d[0], seg_i[0]
-    else:
-        fd = np.concatenate(seg_d, axis=1)
-        fi = np.concatenate(seg_i, axis=1)
-        fd, fi = topk_block(fd, fi, min(k, fd.shape[1]))
+    fd, fi, fp = (np.concatenate(seg, axis=1) for seg in (seg_d, seg_i, seg_p))
+    if len(seg_d) > 1:
+        sel = topk_block_cols(fd, fi, min(k, fd.shape[1]))
+        fd, fi, fp = (np.take_along_axis(a, sel, axis=1) for a in (fd, fi, fp))
+    if metric in ("l2", "cosine", "ip"):
+        # emit pair_dists' distances, as every IVF plan does
+        F64, sq64 = idx.packed_scan(metric)[:2]
+        pad = fi == _PAD_ID
+        fp = np.where(pad, 0, fp)
+        fd = pair_dists(q64, F64[fp], metric, None if sq64 is None else sq64[fp])
+        fd[pad] = np.inf
+        order = np.lexsort((fi, fd), axis=1)
+        fd = np.take_along_axis(fd, order, axis=1)
+        fi = np.take_along_axis(fi, order, axis=1)
     kk = fd.shape[1]
     valid = (fi != _PAD_ID).ravel()
     ranks = np.broadcast_to(
@@ -1122,12 +1219,28 @@ def _search_batch_exact(
     )
 
 
+def _arrow_rows(out: pd.DataFrame):
+    """A search kernel's (qid, id, dist, rank) frame as one Arrow batch."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(out["qid"].to_numpy()),
+            pa.array(out["id"].to_numpy()),
+            pa.array(out["dist"].to_numpy()),
+            pa.array(out["rank"].to_numpy().astype("int32")),
+        ],
+        names=["qid", "id", "dist", "rank"],
+    )
+
+
 def query_driven_job(
     query_df: DataFrame,
     qid_col: str,
     vec_col: str,
     batch_fn,
     rows_per_task: int = 512,
+    gil_free: bool = False,
 ) -> DataFrame:
     """Generic serving-job driver for kernels of the shape
     ``batch_fn(qids, float32 qmat) -> pd.DataFrame(qid,id,dist,rank)``:
@@ -1146,9 +1259,17 @@ def query_driven_job(
     two-phase bound search) pass a smaller floor so mid-size batches
     still spread across the executor pool — the r11 routing left the
     2048-query cluster-pruned batch on 4 of 32 cores and halved its
-    serving QPS (r11 judge "what's wrong" #1)."""
-    import pyarrow as pa
+    serving QPS (r11 judge "what's wrong" #1).
 
+    ``gil_free`` declares that ``batch_fn`` is NumPy GEMM/ufunc/
+    argpartition work that releases the GIL.  Past
+    ``_SLICE_GROUP_THRESHOLD`` slices, two slices then share one task on
+    a 2-thread pool.  Rationale (measured on this pool): python task
+    dispatch is flat to ~16 in-flight tasks then costs ~5 ms/task — a
+    32-task stage pays ~85 ms of dispatch tail, most of the fixed cost
+    of a 65k-query sq8 batch; two GIL-free slices genuinely overlap in
+    one worker (A/B: 158.5k → 175.2k QPS at 65k queries; 4 threads/task
+    regressed — GIL contention).  The slice grid is unchanged."""
     from vectordb_retrieval_spark.functions.kernels import (
         num_partitions_cached,
         query_broadcast_cached,
@@ -1156,146 +1277,70 @@ def query_driven_job(
 
     spark = query_df.sparkSession
     schema = "qid long, id long, dist double, rank int"
+    par = spark.sparkContext.defaultParallelism
     bcq = query_broadcast_cached(query_df, qid_col, vec_col)
     if bcq is not None:
-        n = len(bcq.value[0])
-        par = spark.sparkContext.defaultParallelism
+        n = len(bcq.value[0])  # driver-side broadcast read: no job
         rpt = rows_per_task(n) if callable(rows_per_task) else rows_per_task
-        n_tasks = max(1, min(par, -(-n // max(1, rpt))))
-        rng = spark.range(0, n_tasks, 1, n_tasks)
+        n_slices = max(1, min(par, -(-n // max(1, rpt))))
+        threads = 2 if gil_free and n_slices > _SLICE_GROUP_THRESHOLD else 1
+        n_tasks = -(-n_slices // threads)
 
         def kernel(batches):
             qids_all, qmat_all = bcq.value
+
+            def one(i: int):
+                s, e = (i * n) // n_slices, ((i + 1) * n) // n_slices
+                return batch_fn(qids_all[s:e], qmat_all[s:e]) if e > s else None
+
             for rb in batches:
                 for c in rb.column(0).to_pylist():
-                    s = (c * n) // n_tasks
-                    e = ((c + 1) * n) // n_tasks
-                    if e <= s:
-                        continue
-                    out = batch_fn(qids_all[s:e], qmat_all[s:e])
-                    if out is not None and len(out):
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(out["qid"].to_numpy()),
-                                pa.array(out["id"].to_numpy()),
-                                pa.array(out["dist"].to_numpy()),
-                                pa.array(
-                                    out["rank"].to_numpy().astype("int32")
-                                ),
-                            ],
-                            names=["qid", "id", "dist", "rank"],
-                        )
+                    slices = range(c * threads, min((c + 1) * threads, n_slices))
+                    if threads == 1:
+                        outs = map(one, slices)
+                    else:
+                        from concurrent.futures import ThreadPoolExecutor
 
+                        with ThreadPoolExecutor(threads) as ex:
+                            outs = list(ex.map(one, slices))
+                    for out in outs:
+                        if out is not None and len(out):
+                            yield _arrow_rows(out)
+
+        rng = spark.range(0, n_tasks, 1, n_tasks)
         return rng.mapInArrow(kernel, schema=schema)
 
+    # past-gate query frames keep the distributed scan: spreading the
+    # frame across the executor pool costs one round-robin exchange and
+    # sets the search's whole parallelism.  The partition count is read
+    # via a WeakKey memo on the caller's frame (a narrow select keeps
+    # partitioning; .rdd.getNumPartitions() is a plan conversion)
     q = query_df.select(
         F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec")
     )
-    par = spark.sparkContext.defaultParallelism
     if num_partitions_cached(query_df) < par:
         q = q.repartition(par)
 
-    def kernel_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = batch_fn(
-                pdf["qid"].to_numpy(dtype=np.int64),
-                np.vstack(pdf["vec"].to_numpy()).astype(np.float32),
-            )
-            if out is not None and len(out):
-                yield out
-
-    return q.mapInPandas(kernel_scan, schema=schema)
-
-
-def _broadcast_query_plan(
-    spark,
-    bcq,
-    bc_index,
-    nprobe: int | None,
-    k: int,
-    metric: str,
-    norm_q: bool,
-    accum,
-    allowed_bc,
-    block_rows: int,
-    rows_per_task: int = 512,
-) -> DataFrame:
-    """Serving job over a broadcast query matrix: ``spark.range`` of
-    chunk indices drives ``search_batch`` calls per task, each slicing
-    its queries from the broadcast — no query bytes cross the
-    JVM→Python boundary per search.  The query-slice grid targets one
-    ≥``rows_per_task``-row slice per core; when that needs more than 16
-    python tasks, slices are grouped TWO per task and run on a 2-thread
-    pool inside the task.  Rationale (measured on this pool): python
-    task dispatch is flat to ~16 in-flight tasks then costs ~5 ms/task
-    — a 32-task stage pays ~85 ms of dispatch tail, most of the fixed
-    cost of a 65k-query sq8 batch.  ``search_batch`` is NumPy
-    GEMM/ufunc/argpartition work that releases the GIL, so two slices
-    genuinely overlap in one worker (A/B: 158.5k → 175.2k QPS at 65k
-    queries; 4 threads/task regressed — GIL contention).  The slice
-    grid is UNCHANGED, so per-slice GEMM shapes — and therefore results
-    — are identical to the one-slice-per-task plan."""
-    import pyarrow as pa
-
-    n = len(bcq.value[0])  # driver-side broadcast read: no job
-    par = spark.sparkContext.defaultParallelism
-    n_slices = max(1, min(par, -(-n // max(1, rows_per_task))))
-    threads_per_task = 2 if n_slices > _SLICE_GROUP_THRESHOLD else 1
-    n_tasks = -(-n_slices // threads_per_task)
-    rng = spark.range(0, n_tasks, 1, n_tasks)
-
-    def kernel(batches):
-        idx: PackedClusters = bc_index.value
-        if allowed_bc is not None:
-            idx = idx.filtered(allowed_bc.value)
-        qids_all, qmat_all = bcq.value
-
-        def one(slice_i: int):
-            s = (slice_i * n) // n_slices
-            e = ((slice_i + 1) * n) // n_slices
-            if e <= s:
-                return None
-            qmat = qmat_all[s:e]
-            if norm_q:
-                qmat = normalize_rows(
-                    qmat.astype(np.float64)
-                ).astype(np.float32)
-            return search_batch(
-                idx, qids_all[s:e], qmat, nprobe, k, metric,
-                accum=accum, block_rows=block_rows,
-            )
-
+    def kernel_scan(batches):
+        # Arrow-native: the query vectors arrive as one flat float
+        # buffer per batch — reshape instead of the per-row vstack a
+        # pandas list column forces (~20% of the fixed per-job cost at
+        # serving batch sizes)
         for rb in batches:
-            for c in rb.column(0).to_pylist():
-                slices = range(
-                    c * threads_per_task,
-                    min((c + 1) * threads_per_task, n_slices),
-                )
-                if threads_per_task == 1:
-                    outs = [one(i) for i in slices]
-                else:
-                    from concurrent.futures import ThreadPoolExecutor
+            if rb.num_rows == 0:
+                continue
+            qids = rb.column(0).to_numpy(zero_copy_only=False).astype(
+                np.int64, copy=False
+            )
+            vals = rb.column(1).flatten().to_numpy(zero_copy_only=False)
+            qmat = np.ascontiguousarray(
+                vals.reshape(rb.num_rows, -1), dtype=np.float32
+            )
+            out = batch_fn(qids, qmat)
+            if out is not None and len(out):
+                yield _arrow_rows(out)
 
-                    with ThreadPoolExecutor(len(slices)) as ex:
-                        outs = list(ex.map(one, slices))
-                for out in outs:
-                    if out is None:
-                        continue
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(out["qid"].to_numpy()),
-                            pa.array(out["id"].to_numpy()),
-                            pa.array(out["dist"].to_numpy()),
-                            pa.array(out["rank"].to_numpy()),
-                        ],
-                        names=["qid", "id", "dist", "rank"],
-                    )
-
-    return rng.mapInArrow(
-        kernel, schema="qid long, id long, dist double, rank int"
-    )
+    return q.mapInArrow(kernel_scan, schema=schema)
 
 
 def broadcast_probe_search(
@@ -1314,7 +1359,7 @@ def broadcast_probe_search(
     """Search a broadcast PackedClusters index: each task probes and
     scans for its own queries and emits their final (qid, id, dist,
     rank) top-k — rank 1..k ascending by (dist, id), the same contract
-    as ``topk_per_query``.
+    as ``topk_per_query`` — in a ``query_driven_job``.
 
     ``nprobe=None`` (or >= nlist, or no centroids) scans every cluster
     — the exhaustive form standalone PQ uses.  ``normalize_queries``
@@ -1323,79 +1368,18 @@ def broadcast_probe_search(
     ``allowed_bc`` (a broadcast sorted int64 id array) turns the search
     into a PRE-filtered one via ``PackedClusters.filtered``.
     """
-    spark = query_df.sparkSession
     if normalize_queries is None:
         normalize_queries = metric == "cosine"
-    norm_q = normalize_queries
-    # broadcast-query fast plan (r10 judge "next round" #2): the one
-    # recurring per-search input cost of this serving plan was shipping
-    # the query vectors JVM→Arrow→Python on every job — an identity
-    # mapInArrow over the 65k-query bench batch measures 0.36 s of its
-    # 0.56 s wall.  Gate-passing frames broadcast their collected
-    # (qids, qmat) ONCE (WeakKey memo, reused across searches and
-    # reps); the search job is then a tiny range frame whose tasks
-    # slice their queries from the broadcast.  Per-query results are
-    # chunk-independent, so output is identical to the scan plan
-    # (pinned in tests/test_ann_operators.py).
-    from vectordb_retrieval_spark.functions.kernels import (
-        num_partitions_cached,
-        query_broadcast_cached,
-    )
 
-    bcq = query_broadcast_cached(query_df, qid_col, vec_col)
-    if bcq is not None:
-        return _broadcast_query_plan(
-            spark, bcq, bc_index, nprobe, k, metric, norm_q,
-            accum, allowed_bc, block_rows,
-        )
-    q = query_df.select(F.col(qid_col).alias("qid"), F.col(vec_col).alias("vec"))
-    # past-gate query frames keep the distributed scan: spreading the
-    # frame across the executor pool costs one round-robin exchange and
-    # sets the search's whole parallelism
-    par = spark.sparkContext.defaultParallelism
-    # partition count read via a WeakKey memo on the caller's frame: a
-    # narrow select preserves partitioning, and the plain
-    # .rdd.getNumPartitions() is a DataFrame→RDD plan conversion paid
-    # per SEARCH otherwise (serving batches reuse the same query frame)
-    if num_partitions_cached(query_df) < par:
-        q = q.repartition(par)
-
-    def kernel(batches):
-        # Arrow-native (mapInArrow): the query vectors arrive as one
-        # flat float buffer per batch — reshape instead of the per-row
-        # vstack a pandas list column forces, and results go back as
-        # zero-copy Arrow arrays.  Worth ~20% of the fixed per-job cost
-        # at serving batch sizes.
-        import pyarrow as pa
-
+    def batch_fn(qids: np.ndarray, qmat: np.ndarray):
         idx: PackedClusters = bc_index.value
         if allowed_bc is not None:
             idx = idx.filtered(allowed_bc.value)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            qids = rb.column(0).to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            vals = rb.column(1).flatten().to_numpy(zero_copy_only=False)
-            qmat = np.ascontiguousarray(
-                vals.reshape(rb.num_rows, -1), dtype=np.float32
-            )
-            if norm_q:
-                qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
-            out = search_batch(
-                idx, qids, qmat, nprobe, k, metric,
-                accum=accum, block_rows=block_rows,
-            )
-            if out is not None:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out["qid"].to_numpy()),
-                        pa.array(out["id"].to_numpy()),
-                        pa.array(out["dist"].to_numpy()),
-                        pa.array(out["rank"].to_numpy()),
-                    ],
-                    names=["qid", "id", "dist", "rank"],
-                )
+        if normalize_queries:
+            qmat = normalize_rows(qmat.astype(np.float64)).astype(np.float32)
+        return search_batch(
+            idx, qids, qmat, nprobe, k, metric,
+            accum=accum, block_rows=block_rows,
+        )
 
-    return q.mapInArrow(kernel, schema="qid long, id long, dist double, rank int")
+    return query_driven_job(query_df, qid_col, vec_col, batch_fn, gil_free=True)
