@@ -252,6 +252,40 @@ def test_labeled_sweep_matches_generic(spark):
         assert all(r[1] == 3 for r in a)
 
 
+def test_duplicate_gt_ids_take_best_rank_under_any_partitioning(spark):
+    """A ground-truth id listed at two ranks counts at its best rank,
+    whatever order collect_list gathers the duplicates in: the frame
+    with the rank-3 copy first and the frame with it last agree."""
+    from pyspark.sql import functions as F
+
+    from vectordb_retrieval_spark.metrics import (
+        retrieval_metrics_multi,
+        retrieval_metrics_multi_labeled,
+    )
+
+    gt_rows = [(0, 5, 3), (0, 6, 2), (0, 5, 1), (1, 7, 1)]
+    pred_rows = [(0, 5, 1), (0, 6, 2), (1, 7, 1)]
+    pred = make_ranked(spark, pred_rows)
+    frames = (
+        make_ranked(spark, gt_rows).coalesce(1),  # id 5's rank-3 copy first
+        make_ranked(spark, gt_rows[::-1]).repartition(3),
+    )
+    results = []
+    for gt in frames:
+        labeled = pred.withColumn("which", F.lit(1)).unionByName(
+            gt.withColumn("which", F.lit(0))
+        )
+        results.append(
+            [tuple(r) for r in retrieval_metrics_multi(pred, gt, [1, 2]).collect()]
+        )
+        results.append(
+            [tuple(r) for r in retrieval_metrics_multi_labeled(labeled, [1, 2]).collect()]
+        )
+    assert all(r == results[0] for r in results)
+    # q0's id 5 counts at rank 1: recall 1.0 at k=1 for both queries
+    assert [r[2] for r in results[0]] == [1.0, 1.0]
+
+
 def test_labeled_single_k_matches_retrieval_metrics(spark):
     """The at-10 slot's labeled fast path: multi-labeled at one cutoff
     equals the classic retrieval_metrics frame."""

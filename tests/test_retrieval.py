@@ -516,3 +516,13 @@ def test_term_match_pattern_edges():
     assert _term_match_pattern(["", " ", "a b", "a\tb"]) is None
     p = _term_match_pattern(["x", "x", "y"])  # deduped
     assert p.count("\\Qx\\E") == 1 and "\\Qy\\E" in p
+
+
+def test_bm25_rank_rejects_streaming_docs(spark, tmp_path):
+    """The corpus statistics are an eager collect: a streaming frame
+    gets a clear error before any action, not an analysis failure."""
+    stream = spark.readStream.schema("doc_id long, text string").json(
+        str(tmp_path)
+    )
+    with pytest.raises(ValueError, match="batch DataFrame"):
+        bm25_rank(stream, ["spark"])

@@ -1203,9 +1203,11 @@ def cluster_scan_topk(
             "sub",
         ).filter(F.col("cluster_id").isin(probed_ids))
     if n_tasks is not None:
-        # small serving batches: the per-task python dispatch (~4-8 ms
-        # on this pool) rivals the per-task kernel, so a one-partition-
-        # per-core layout pays ~2× the whole stage in handshakes.
+        # small serving batches: the per-task python dispatch rivals
+        # the per-task kernel (each task past the first wave adds
+        # ~18 ms of stage wall on a 4-vCPU VM: trivial 4-task and
+        # 32-task mapInPandas jobs take 0.13 s and 0.62 s), so a one-
+        # partition-per-core layout pays mostly handshakes.
         # coalesce is a narrow dependency — each task reads several
         # cached/pruned blob partitions locally, no shuffle; the greedy
         # bin-packing keeps merged loads near-even.  Unconditional:
@@ -1230,16 +1232,19 @@ def merge_fragment_topk(
     Merge parallelism scales with the query count (one task per ~1024
     queries, capped at defaultParallelism): the kernel is a single
     lexsort over n_q × tasks_probed rows, so at serving batch sizes
-    task DISPATCH dominates — this container measured ~8 ms/task
-    beyond 16 in-flight python tasks, i.e. a 32-task merge stage cost
-    more than the merge itself.
+    task DISPATCH dominates — each python task past the first wave
+    adds ~18 ms of stage wall on a 4-vCPU VM, more than the merge
+    itself.
 
     Small batches (≤ 4096 queries) merge JVM-side instead: explode the
     fragment lists and row_number over (dist, id) — identical
     lexicographic output, but the merge stage carries no python-worker
-    handshake at all (a JVM-only stage costs ~0.07 s on this pool vs
-    ~0.15-0.28 s for a python one), which is most of a small-batch
-    search's wall.  Candidate counts there are bounded by
+    handshake at all (a 1-task JVM-only job costs ~0.05 s on a 4-vCPU
+    VM vs ~0.11 s for a python one).  On 128-query IVF-SQ8 searches
+    (20k×64, nprobe 16, shm plan) the JVM merge measured 491 ms per
+    search against 519 ms for the python merge (median of 60
+    interleaved pairs, python faster in 25; rows identical).
+    Candidate counts there are bounded by
     n_q × scan_tasks × k, so the exchange stays tiny — and the
     fragment LIST rows are repartitioned by qid BEFORE the explode
     (guide §3.3: explode before an exchange multiplies it — here by

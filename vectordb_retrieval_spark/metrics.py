@@ -213,14 +213,16 @@ def _metrics_from_lists(
     #
     # per-pred-item match flags, computed ONCE per qid (k-independent):
     # hit = id ∈ gt set; gtr = that gt member's rank (kmax+1 sentinel
-    # when absent — ``get()`` not ``[0]`` so the empty no-match array
-    # yields null, not an ANSI index error — so ``gtr <= k`` reproduces
-    # ``gt_rank <= k`` exactly)
+    # when absent: ``array_min`` of the empty no-match array is null —
+    # so ``gtr <= k`` reproduces ``gt_rank <= k`` exactly).  A gt id
+    # listed at several ranks takes its best one, whatever order
+    # collect_list gathered them in.
     ml = F.expr(
         "transform(coalesce(pl, array()), e -> struct("
         "  e.rank as rank,"
         "  cast(exists(gl, x -> x.id = e.id) as int) as hit,"
-        f" coalesce(get(filter(gl, x -> x.id = e.id), 0).rank, {kmax + 1})"
+        "  coalesce(array_min(transform(filter(gl, x -> x.id = e.id),"
+        f"                                 x -> x.rank)), {kmax + 1})"
         "    as gtr))"
     )
     marked = joined.select(

@@ -60,8 +60,9 @@ def _scan_tasks(n_queries: int) -> int | None:
     """Partitioned-scan stage width for a serving batch — module-level
     so the policy is A/B-able per kernel (cf. serving's
     _SLICE_GROUP_THRESHOLD).  Small batches shrink the stage so
-    per-task python dispatch doesn't dominate; past 4096 queries the
-    scan keeps the index's own partitioning."""
+    per-task python dispatch doesn't dominate (each task past the first
+    wave adds ~18 ms of stage wall on a 4-vCPU VM); past 4096 queries
+    the scan keeps the index's own partitioning."""
     return max(8, n_queries // 64) if n_queries <= 4096 else None
 
 
@@ -276,7 +277,12 @@ class ClusterPrunedExactSearcher:
         # on the bench config: 512→2.3k QPS, 64→5.9k, 32→6.6k vs r10's
         # direct-path 4.9k) — but a small batch must NOT shred into
         # per-task dispatch (32-row tasks cost a 200-query sf0.1 batch
-        # +17%: 3.86 s vs 3.22 s at 128; measured same-window, 4 reps)
+        # +17% on 32 cores: 3.86 s vs 3.22 s at 128, same-window, 4
+        # reps, when every python task re-read its zip archives).
+        # Without those re-reads, on a 4-vCPU VM (20k×64, nlist 32,
+        # nprobe 8, 200-query batches, 20 interleaved pairs) 32 rows/
+        # task took 276 ms per search vs 305 ms at 128 (32 faster in
+        # 14 pairs; the two tied before, 541 vs 529 ms)
         return query_driven_job(
             query_df,
             qid_col,

@@ -1264,12 +1264,16 @@ def query_driven_job(
     ``gil_free`` declares that ``batch_fn`` is NumPy GEMM/ufunc/
     argpartition work that releases the GIL.  Past
     ``_SLICE_GROUP_THRESHOLD`` slices, two slices then share one task on
-    a 2-thread pool.  Rationale (measured on this pool): python task
-    dispatch is flat to ~16 in-flight tasks then costs ~5 ms/task — a
-    32-task stage pays ~85 ms of dispatch tail, most of the fixed cost
-    of a 65k-query sq8 batch; two GIL-free slices genuinely overlap in
-    one worker (A/B: 158.5k → 175.2k QPS at 65k queries; 4 threads/task
-    regressed — GIL contention).  The slice grid is unchanged."""
+    a 2-thread pool.  Rationale (measured on a 32-core pool): python
+    task dispatch was flat to ~16 in-flight tasks then cost ~5 ms/task
+    — a 32-task stage paid ~85 ms of dispatch tail, most of the fixed
+    cost of a 65k-query sq8 batch; two GIL-free slices genuinely overlap
+    in one worker (A/B: 158.5k → 175.2k QPS at 65k queries; 4 threads/
+    task regressed — GIL contention).  The slice grid is unchanged.
+    Those figures predate the worker bootstrap (``pyworker.py``), which
+    removed ~0.2 s of zip-archive re-reads from every python task: on a
+    4-vCPU VM a trivial 32-task job went 2.22 → 0.62 s and each task
+    past the first wave now adds ~18 ms of stage wall."""
     from vectordb_retrieval_spark.functions.kernels import (
         num_partitions_cached,
         query_broadcast_cached,

@@ -150,7 +150,17 @@ def bm25_rank(
     - per-document score = fixed-order sum of the per-term partials
       (the old groupBy sum accumulated in shuffle-arrival order; both
       land on the same 6-dp grid the callers round to).
+
+    The corpus statistics are collected when this is called, so a
+    streaming ``docs`` raises ``ValueError``.
     """
+    if docs.isStreaming:
+        raise ValueError(
+            "bm25_rank needs a batch DataFrame: it collects the corpus "
+            "statistics (document count, average length, document "
+            "frequencies) when called; rank a stream per micro-batch "
+            "with foreachBatch"
+        )
     nt = len(query_terms)
     toks_expr = F.filter(
         F.split(F.col(text_col), TOKEN_PATTERN),
